@@ -59,7 +59,8 @@ def main() -> None:
 
     pseudo = {"pagerank_iteration_lazy": _pagerank_iteration_lazy}
     for name in names:
-        df = pseudo.get(name, QUERIES.get(name))(spark, sf_dir)
+        fn = pseudo.get(name) or QUERIES[name]  # unknown name: KeyError naming it
+        df = fn(spark, sf_dir)
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):
             df.explain("formatted")

@@ -1094,8 +1094,14 @@ def probe_cores(base: str) -> None:
         return json.loads(out)["timings"]
 
     mins: dict[int, dict[str, float]] = {8: {}, 32: {}}
-    for cpus in (8, 32, 32, 8):
+    for i, cpus in enumerate((8, 32, 32, 8)):
         t = session(cpus)
+        if i == 0 and not set(queries) <= set(t):
+            # ab_probe.py skips names missing from the registry; fail
+            # before the remaining sessions rather than at the table.
+            raise KeyError(
+                f"queries not timed (not registered?): {sorted(set(queries) - set(t))}"
+            )
         for n, v in t.items():
             mins[cpus][n] = min(v, mins[cpus].get(n, float("inf")))
         print(f"cpus={cpus}: {t}", flush=True)
