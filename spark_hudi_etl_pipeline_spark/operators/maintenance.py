@@ -88,9 +88,10 @@ def refresh_aggregate_parquet(
     count_alias: str = "n_rows",
 ) -> DataFrame:
     """Materializing incremental refresh: fold ``batch``'s partial state
-    into the summary table at ``path`` (read-modify-write like
-    operators/merge.upsert_parquet; a Hudi/Delta connector would make
-    the commit transactional). Returns the post-refresh state."""
+    into the summary table at ``path`` (read-modify-write with an
+    in-place overwrite — unlike operators/merge.upsert_parquet, which
+    commits through a versioned manifest; a Hudi/Delta connector would
+    make this commit transactional). Returns the post-refresh state."""
     state = aggregate_state(batch, keys, sums, count_alias=count_alias)
     existing = read_state_if_exists(spark, path)
     merged = merge_aggregate_state(existing, state, keys).localCheckpoint(eager=True)

@@ -18,21 +18,30 @@ table can be written with ``format("hudi")`` and these exact options
 (:func:`hudi_writer_options`); the pure-Spark path below is the primary
 correctness path in this environment (SURVEY.md §7 risk register).
 
+One writer: :func:`upsert_parquet` is the keyed copy-on-write sink for
+every flat table (data tables, the audit log, the cost log, streaming
+sinks, catalog transactions). It commits through the manifest protocol
+below, and its ``index`` argument — Hudi's ``hoodie.index.type``, a table
+setting rather than a second writer — only decides WHICH live files a
+batch rewrites: all of them (``None``), those whose footer key range
+meets a batch key (``"range"``), those whose bloom sidecar may hold one
+(``"bloom"``), or those the record-level sidecar maps a batch key to
+(``"record"``).
+
 Scale design (100 TB table, small incremental batch):
 - The batch-side window dedup shuffles only the batch (small).
 - The merge join is an outer join table⋈batch on the key. With the table
   bucketed/clustered by key (how you'd lay out a 100 TB keyed table),
   Catalyst plans a broadcast join of the batch against bucketed scans —
-  no table-side shuffle. COW file rewrite then touches only the files
-  whose key ranges intersect the batch (what Hudi's index does); the
-  parquet fallback here rewrites the table, which is correct-but-O(table)
-  — exactly why production deployments flip on the Hudi connector, and
-  why `merge_upsert` is also exposed as a pure DataFrame transform so the
-  sink choice is orthogonal.
+  no table-side shuffle. With an index the COW rewrite touches only the
+  files the batch can reach (what Hudi's index does); ``index=None`` is
+  correct-but-O(table), and `merge_upsert` is also exposed as a pure
+  DataFrame transform so the sink choice is orthogonal.
 """
 
 from __future__ import annotations
 
+import re
 from typing import NamedTuple
 
 from pyspark.sql import DataFrame, Observation, Window
@@ -41,10 +50,7 @@ from pyspark.sql import functions as F
 PRECOMBINE_TIEBREAK = "__precombine_rn"
 
 
-def precombine_batch(
-    batch: DataFrame, keys: list[str], precombine: str,
-    *, salt_buckets: int | None = None,
-) -> DataFrame:
+def precombine_batch(batch: DataFrame, keys: list[str], precombine: str) -> DataFrame:
     """Collapse the batch to one row per key, keeping the row with the
     largest ``precombine`` value (Hudi preCombineField semantics,
     reference :95/:115). Deterministic under ties: arbitrary-but-stable
@@ -52,41 +58,13 @@ def precombine_batch(
     Hudi's own tie behavior is unspecified; we keep the first by file
     order like Hudi's default payload.
 
-    ``salt_buckets=N`` opts into a salted two-phase max-by for hot-key
-    batches (r5 verdict ask #5): phase 1 reduces within ``(keys,
-    salt)``, phase 2 reduces the ≤N survivors per key. Ties on the
-    precombine value break by a row-content hash (a total order, needed
-    so the two-phase result is well-defined); identical to the flat
-    path whenever the precombine value is unique per key.
-
-    MEASURED GUIDANCE (SCALE.md §hot-key upsert probe): leave this OFF
-    on Spark 4 — the engine plans the ``rank<=1`` filter as
+    Hot keys need no salting: Spark 4 plans the ``rank<=1`` filter as
     ``WindowGroupLimit`` Partial/Final, a map-side top-1-per-key
     reduction BEFORE the shuffle, so a hot key arrives at its reducer
-    already collapsed to ~one row per upstream task and the flat path
-    beat salt_buckets=16 at every probed skew (the salted path pays a
-    second shuffle for protection the engine already provides). The
-    option exists for engines/paths without that rewrite, and because
-    guessing was not acceptable: the probe is how we know.
+    already collapsed to ~one row per upstream task (SCALE.md §hot-key
+    upsert probe measured a salted two-phase variant losing at every
+    probed skew).
     """
-    if salt_buckets and salt_buckets > 1:
-        tie = F.xxhash64(*[F.col(c) for c in batch.columns])
-        salt = F.pmod(tie, F.lit(salt_buckets))
-        w1 = Window.partitionBy(*keys, "__salt").orderBy(
-            F.desc(precombine), F.asc("__tie")
-        )
-        w2 = Window.partitionBy(*keys).orderBy(
-            F.desc(precombine), F.asc("__tie")
-        )
-        return (
-            batch.withColumn("__tie", tie)
-            .withColumn("__salt", salt)
-            .withColumn(PRECOMBINE_TIEBREAK, F.row_number().over(w1))
-            .filter(F.col(PRECOMBINE_TIEBREAK) == 1)
-            .withColumn(PRECOMBINE_TIEBREAK, F.row_number().over(w2))
-            .filter(F.col(PRECOMBINE_TIEBREAK) == 1)
-            .drop(PRECOMBINE_TIEBREAK, "__salt", "__tie")
-        )
     w = Window.partitionBy(*keys).orderBy(F.desc(precombine))
     return (
         batch.withColumn(PRECOMBINE_TIEBREAK, F.row_number().over(w))
@@ -130,18 +108,6 @@ def align_schemas(
     return existing2, batch2
 
 
-def _write_parquet_counted(merged: DataFrame, path: str) -> int:
-    """Overwrite-write ``merged`` to ``path`` and return its row count,
-    counted by an Observation ON THE WRITE JOB itself — a trailing
-    ``merged.count()`` on a lazy merge replays the whole precombine/
-    merge pipeline a second time (r13 optimization round)."""
-    obs = Observation()
-    merged.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
-        "overwrite"
-    ).parquet(path)
-    return int(obs.get["n"])
-
-
 def merge_upsert(
     existing: DataFrame | None,
     batch: DataFrame,
@@ -151,15 +117,8 @@ def merge_upsert(
     delete_col: str | None = None,
     evolve_schema: bool = False,
     partial_update: bool = False,
-    salt_buckets: int | None = None,
 ) -> DataFrame:
     """Pure-DataFrame upsert: returns the post-merge table contents.
-
-    ``salt_buckets=N`` salts the in-batch precombine window for hot-key
-    batches (see :func:`precombine_batch`); every other stage of the
-    merge is key-unique on both sides, so the window is the only skew
-    surface. The merge result is identical whenever the precombine
-    value is unique per key (ties instead break by row-content hash).
 
     ``existing=None`` models first write. Batch rows always beat existing
     rows with equal precombine values (Hudi upsert overwrite semantics —
@@ -204,9 +163,7 @@ def merge_upsert(
         existing, batch = align_schemas(
             existing, batch, skip=(delete_col,) if delete_col else ()
         )
-    deduped = precombine_batch(
-        batch, keys, precombine, salt_buckets=salt_buckets
-    )
+    deduped = precombine_batch(batch, keys, precombine)
     if existing is None:
         if delete_col is not None:
             deduped = deduped.filter(
@@ -397,6 +354,17 @@ def merge_into(
     return joined.filter(keep & no_multi).select(*out_cols)
 
 
+class UpsertResult(NamedTuple):
+    """What an upsert committed: row count plus THE manifest version this
+    write published. Callers that pin versions (the multi-table catalog
+    in ``operators/txn.py``) must use ``version`` rather than re-reading
+    the latest manifest — a concurrent publish landing between the
+    upsert's commit and a re-read would be silently adopted otherwise."""
+
+    rows_written: int
+    version: int
+
+
 def upsert_parquet(
     spark,
     batch: DataFrame,
@@ -404,34 +372,114 @@ def upsert_parquet(
     keys: list[str],
     precombine: str,
     *,
+    index: str | None = None,
     delete_col: str | None = None,
     evolve_schema: bool = False,
     partial_update: bool = False,
-) -> int:
-    """Materializing upsert sink (reference R7 write_hudi_table,
-    :238-260, re-expressed): merge ``batch`` into the parquet table at
-    ``path``; returns rows written. Read-modify-write with an overwrite
-    commit; single atomic directory swap via a staging write because
-    parquet has no transaction log (Hudi/Delta would make this a real
-    ACID commit — connector passthrough point).
+    clean: bool = True,
+    base_version: int | None = None,
+) -> UpsertResult:
+    """Keyed copy-on-write upsert sink (reference R7 write_hudi_table,
+    :238-260): merge ``batch`` into the flat parquet table at ``path``
+    and commit it as manifest version N+1. Every call, first write
+    included, takes one path:
 
-    ``evolve_schema=True`` = Hudi ``hoodie.schema.on.read.enable``
-    passthrough semantics: the table schema widens to the batch's new
-    columns (see :func:`align_schemas`).
+    1. live files = the latest manifest's (directory listing for a
+       pre-manifest table, nothing for a new path);
+    2. the files the batch can touch, chosen by ``index``;
+    3. :func:`merge_upsert` of the batch against those files;
+    4. the result written to a staging directory (rows counted by an
+       Observation on that write);
+    5. staged files moved in, manifest N+1 published (the compare-and-
+       swap commit point), replaced files cleaned, index sidecar updated.
+
+    ``index`` is Hudi's ``hoodie.index.type`` and decides step 2 only —
+    the result is the same whichever is used:
+
+    - ``None``: every live file (the O(table) rewrite; no index state);
+    - ``"range"``: files whose parquet-footer min/max of the key meets a
+      batch key (Hudi SIMPLE; prunes on a ``cluster_linear``-by-key
+      layout, degrades to every file on a scattered one);
+    - ``"bloom"``: files whose per-file bloom bitset in the ``_bloom``
+      sidecar may hold a batch key (Hudi BLOOM; prunes on any layout,
+      false positives only cost a rewrite);
+    - ``"record"``: files the exact key→file ``_rli`` sidecar maps a
+      batch key to (Hudi RECORD_INDEX; no false positives, the index is
+      O(table keys)).
+
+    Inserts outside every touched file land as new files; untouched
+    files keep their bytes. A sidecar is validated against the manifest
+    on load and cold-rebuilt on mismatch (a crash between publish and
+    sidecar update costs one rebuild, never a missed file), and is
+    updated post-commit for the files this commit replaced and wrote.
+    Indexes need a single-column key.
+
+    ``evolve_schema=True`` = Hudi ``hoodie.schema.on.read.enable``: the
+    table schema widens to the batch's new columns (see
+    :func:`align_schemas`); it rewrites every file, so ``index`` must be
+    None.
+
+    ``clean=False`` keeps replaced files on disk — required when a
+    catalog pins older manifest versions (``operators/txn.py``); such
+    tables are reclaimed by :func:`retire_manifests` +
+    :func:`vacuum_orphans`. ``base_version`` merges against THAT
+    committed version's files instead of the latest (still publishing at
+    latest+1; never cleans) — what lets catalog branches write one table
+    without seeing each other. Neither combines with a sidecar index,
+    whose single sidecar tracks the latest version only.
+
+    Returns :class:`UpsertResult` (rows written, THE version published).
+    Raises :class:`ConcurrentCommitError` when another writer published
+    version N+1 first; this call's files are then removed again.
     """
-    try:
-        existing = spark.read.parquet(path)
-    except Exception:  # first write: path absent
-        existing = None
+    import os
+
+    if index is not None:
+        if len(keys) != 1:
+            raise ValueError(f"index={index!r} needs a single-column key, got {keys}")
+        if evolve_schema:
+            raise ValueError("evolve_schema rewrites every file; use index=None")
+        if index in _SIDECARS and (base_version is not None or not clean):
+            raise ValueError(
+                f"index={index!r} keeps one sidecar for the latest version; "
+                "base_version and clean=False need index=None or 'range'"
+            )
+    version, live = table_live_files(path)
+    if base_version is not None and base_version != version:
+        live = manifest_files_at(path, base_version)
+        # The cleaner would delete files other versions (other branch
+        # heads) still reference. Never clean on a branched write.
+        clean = False
+    sidecar = None
+    if index in _SIDECARS and live:
+        # Materialized (metadata-scale): the commit below deletes data
+        # files and overwrites the sidecar this lazy plan may read.
+        sidecar = _load_sidecar(spark, path, index, keys[0], live)
+        sidecar = sidecar.localCheckpoint(eager=True)
+    touched = (
+        _touched_files(spark, path, index, keys[0], live, batch, sidecar) if live else []
+    )
     merged = merge_upsert(
-        existing, batch, keys, precombine,
+        _read_files(spark, path, touched) if touched else None,
+        batch, keys, precombine,
         delete_col=delete_col, evolve_schema=evolve_schema,
         partial_update=partial_update,
     )
-    if existing is not None:
-        # Materialize the merge before overwriting the files we read.
-        merged = merged.localCheckpoint(eager=True)
-    return _write_parquet_counted(merged, path)
+    staging, n_written = _stage(merged, path)
+    moved = _commit_staged(
+        path, staging, version + 1,
+        kept=sorted(set(live) - set(touched)),
+        replaced=touched if clean else [],
+    )
+    if index in _SIDECARS:
+        # Incremental index maintenance, O(commit): drop the replaced
+        # files' entries, add the new files'.
+        build = _table_bloom_words if index == "bloom" else _table_rli
+        rel = build(spark, path, keys[0], moved)
+        if sidecar is not None:
+            rel = sidecar.filter(~F.col("file").isin(touched)).unionByName(rel)
+        rel.write.mode("overwrite").parquet(os.path.join(path, _SIDECARS[index]))
+    return UpsertResult(n_written, version + 1)
 
 
 def upsert_parquet_partitioned(
@@ -534,13 +582,16 @@ def upsert_parquet_partitioned(
 
 
 # ---------------------------------------------------------------------------
-# Manifest commit protocol (shared by the file-indexed and bloom-indexed
-# COW writers): the commit point is publishing manifest version N+1 — a
-# single new immutable object — never a directory mutation.
+# Manifest commit protocol (every write of a flat keyed table —
+# upsert_parquet, recluster_indexed_table, wap_upsert — goes through
+# _stage + _commit_staged): the commit point is publishing manifest
+# version N+1 — a single new immutable object — never a directory
+# mutation.
 #
-#   write new data files (unique names; invisible until referenced)
+#   write new data files into .staging-<uuid>/ (invisible to scans)
+#     → move them in under unique names    (invisible until referenced)
 #     → publish _manifest/vN+1.json        ← THE atomic commit point
-#     → best-effort clean of replaced files (post-commit, a cleaner's job)
+#     → delete the files this commit replaced (post-commit cleaner)
 #
 # Readers resolve the live file set from the LATEST manifest, so a crash
 # at any point leaves them on version N (old complete state) or N+1 (new
@@ -646,25 +697,59 @@ def table_live_files(path: str) -> tuple[int, list[str]]:
     )
 
 
+def _read_files(spark, path: str, files: list[str]) -> DataFrame:
+    """Scan exactly ``files`` of the flat table at ``path``: ONE listing
+    of the table directory, filtered by file name. Passing each file as
+    its own path would cost a Spark listing job once there are more than
+    ``spark.sql.sources.parallelPartitionDiscovery.threshold`` (32)."""
+    names = ",".join(re.sub(r"([\\*?\[\]{},])", r"\\\1", f) for f in files)
+    return spark.read.option("pathGlobFilter", "{" + names + "}").parquet(path)
+
+
 def read_indexed_table(spark, path: str) -> DataFrame:
-    """Manifest-consistent read of an indexed COW table: only files the
-    latest committed manifest references are scanned, so readers never
-    observe a torn commit (orphaned pre-crash files are invisible)."""
+    """Manifest-consistent read of a COW table: only files the latest
+    committed manifest references are scanned, so readers never observe
+    a torn commit (orphaned pre-crash files are invisible)."""
+    return _read_files(spark, path, table_live_files(path)[1])
+
+
+def _stage(df: DataFrame, path: str) -> tuple[str, int]:
+    """Write ``df`` into a fresh staging directory under ``path`` (dot
+    prefix: invisible to table scans); returns (staging dir, rows),
+    counted by an Observation on the write job itself — no re-read."""
+    import os
+    import uuid
+
+    staging = os.path.join(path, f".staging-{uuid.uuid4().hex}")
+    obs = Observation()
+    df.observe(obs, F.count(F.lit(1)).alias("n")).write.mode("overwrite").parquet(staging)
+    return staging, int(obs.get["n"])
+
+
+def _remove(path: str, files: list[str]) -> None:
     import os
 
-    _, files = table_live_files(path)
-    return spark.read.parquet(*[os.path.join(path, f) for f in files])
+    for f in files:
+        try:
+            os.remove(os.path.join(path, f))
+        except OSError:
+            pass
 
 
 def _commit_staged(
-    spark, path: str, staging: str, version: int, kept: list[str],
-    *, clean: bool = True,
-) -> tuple[list[str], int]:
-    """Shared commit tail: move staged part files in under unique names
+    path: str, staging: str, version: int, kept: list[str], replaced: list[str]
+) -> list[str]:
+    """The one commit tail: move staged files in under unique names
     (pre-commit — invisible until referenced), publish manifest
     ``version`` over ``kept`` + the new files (THE commit point), then
-    best-effort-clean files the new manifest no longer references.
-    Returns (new file basenames, rows written)."""
+    delete ``replaced``. Returns the new file basenames.
+
+    The cleaner (Hudi's ``hoodie.clean.automatic``) deletes only the
+    files THIS commit replaced — never "everything unreferenced", which
+    would include a concurrent writer's moved-in, not-yet-published
+    files; true orphans are :func:`vacuum_orphans`' job. A writer that
+    loses the manifest compare-and-swap removes the files it moved in,
+    since no manifest will ever reference them."""
     import glob
     import os
     import shutil
@@ -673,163 +758,18 @@ def _commit_staged(
     moved = []
     try:
         for i, f in enumerate(sorted(glob.glob(f"{staging}/*.parquet"))):
-            dest = os.path.join(
-                path, f"part-upsert-{uuid.uuid4().hex}-{i:05d}.parquet"
-            )
-            shutil.move(f, dest)
-            moved.append(os.path.basename(dest))
+            dest = f"part-upsert-{uuid.uuid4().hex}-{i:05d}.parquet"
+            os.replace(f, os.path.join(path, dest))
+            moved.append(dest)
     finally:
         shutil.rmtree(staging, ignore_errors=True)
-    live = sorted(set(kept) | set(moved))
-    _manifest_publish(path, live, version)  # ← commit point
-    # Post-commit cleaner (Hudi's hoodie.clean.automatic): replaced files
-    # are unreferenced by the new manifest; removing them is best-effort
-    # hygiene, not correctness — a crash here leaves orphans that every
-    # manifest-based read ignores. clean=False preserves files referenced
-    # by OLDER manifest versions — required when a catalog pins an earlier
-    # version (operators/txn.py); those tables are reclaimed by the
-    # retention-aware orphan vacuum instead.
-    if clean:
-        for f in glob.glob(os.path.join(path, "*.parquet")):
-            if os.path.basename(f) not in live:
-                try:
-                    os.remove(f)
-                except OSError:
-                    pass
-    n_written = (
-        spark.read.parquet(*[os.path.join(path, m) for m in moved]).count()
-        if moved
-        else 0
-    )
-    return moved, n_written
-
-
-class IndexedUpsertResult(NamedTuple):
-    """What an indexed upsert committed: row count plus THE manifest
-    version this write published. Callers that pin versions (the
-    multi-table catalog in ``operators/txn.py``) must use ``version``
-    rather than re-reading the latest manifest — a concurrent publish
-    landing between the upsert's commit and a re-read would be silently
-    adopted otherwise."""
-
-    rows_written: int
-    version: int
-
-
-def upsert_parquet_indexed(
-    spark,
-    batch: DataFrame,
-    path: str,
-    key: str,
-    precombine: str,
-    *,
-    delete_col: str | None = None,
-    clean: bool = True,
-    base_version: int | None = None,
-) -> IndexedUpsertResult:
-    """File-level indexed upsert: merge ``batch`` into a flat (non-hive)
-    parquet directory rewriting ONLY the files whose footer key range
-    intersects a batch key — Hudi's indexed COW write
-    (``hoodie.index.type=SIMPLE``: key-range pruning from file
-    statistics; pipeline_architecture.py:183-192 relies on exactly this
-    to make upserts O(affected files) on a non-partitioned keyed table,
-    DDL :92-96).
-
-    The index IS the parquet footers (min/max of ``key`` per file,
-    footer-only reads); file affectedness is decided with a broadcast
-    range join of the file-bounds relation (tiny) against the batch's
-    distinct keys — the batch itself never reaches the driver. Files the
-    batch cannot touch keep their bytes and mtimes. Inserts whose keys
-    fall outside every file's range rewrite nothing — they land as one
-    new file.
-
-    Effectiveness tracks layout tightness: on a
-    :func:`~..operators.clustering.cluster_linear`-by-key layout
-    (disjoint ranges — how a keyed table should be clustered, and what
-    Hudi clustering maintains) the rewrite is O(batch key span); on an
-    unclustered layout every file may overlap and the write degrades to
-    the full rewrite of :func:`upsert_parquet`, correctly.
-
-    Commit protocol: the manifest publish is the atomic commit point
-    (see the manifest-protocol block above) — object-store-safe by
-    construction; readers via :func:`read_indexed_table` can never see a
-    torn mix of old and new files.
-
-    Single-column key (the range index is one-dimensional); returns
-    :class:`IndexedUpsertResult` — (rows written, THE manifest version
-    this call published). Version-pinning callers must use that version,
-    never a post-hoc re-read of the latest manifest.
-
-    ``base_version`` merges against THAT committed manifest version's
-    file set instead of the latest (still publishing at latest+1 — the
-    version sequence is pure allocation; lineage lives in whoever pins
-    the result, e.g. a catalog branch head in ``operators/txn.py``).
-    This is what lets two branches write the same table without seeing
-    each other: each merges from its own pinned snapshot.
-    """
-    import os
-    import uuid
-
-    from .clustering import file_column_bounds
-
-    if not os.path.isdir(path):
-        merged = merge_upsert(None, batch, [key], precombine, delete_col=delete_col)
-        n = _write_parquet_counted(merged, path)
-        version, live = table_live_files(path)
-        _manifest_publish(path, live, version + 1)
-        return IndexedUpsertResult(n, version + 1)
-
-    version, live_files = table_live_files(path)
-    if base_version is not None and base_version != version:
-        live_files = manifest_files_at(path, base_version)
-        # The post-commit cleaner keys off the NEW manifest alone; with a
-        # non-latest base it would delete files other versions (other
-        # branch heads) still reference. Never clean on a branched write.
-        clean = False
-    bounds = [
-        b
-        for b in file_column_bounds(path, [key], files=live_files)
-        if b[key][0] is not None
-    ]
-    files_df = spark.createDataFrame(
-        [(b["file"], b[key][0], b[key][1]) for b in bounds],
-        f"file string, lo {batch.schema[key].dataType.simpleString()}, "
-        f"hi {batch.schema[key].dataType.simpleString()}",
-    )
-    affected = [
-        r["file"]
-        for r in (
-            batch.select(F.col(key).alias("__bk"))
-            .distinct()
-            .join(
-                F.broadcast(files_df),
-                (F.col("__bk") >= F.col("lo")) & (F.col("__bk") <= F.col("hi")),
-            )
-            .select("file")
-            .distinct()
-            .collect()
-        )
-    ]
-    if affected:
-        existing_sub = spark.read.parquet(
-            *[os.path.join(path, f) for f in affected]
-        )
-        merged = merge_upsert(
-            existing_sub, batch, [key], precombine, delete_col=delete_col
-        )
-    else:
-        merged = merge_upsert(
-            None, batch, [key], precombine, delete_col=delete_col
-        )
-    # Stage (the merge reads the files it replaces, so the staging write
-    # doubles as materialization) → manifest commit → clean.
-    staging = f"{path}/.staging-{uuid.uuid4().hex}"
-    merged.write.mode("overwrite").parquet(staging)
-    kept = [f for f in live_files if f not in set(affected)]
-    _, n_written = _commit_staged(
-        spark, path, staging, version + 1, kept, clean=clean
-    )
-    return IndexedUpsertResult(n_written, version + 1)
+    try:
+        _manifest_publish(path, sorted(set(kept) | set(moved)), version)  # ← commit
+    except ConcurrentCommitError:
+        _remove(path, moved)
+        raise
+    _remove(path, replaced)
+    return moved
 
 
 #: Bloom-index sizing: 65536 bits (8 KiB) / 5 hashes per file ⇒ <0.5%
@@ -870,26 +810,17 @@ def _bloom_words(file_keys: DataFrame, key: str) -> DataFrame:
     )
 
 
-def _table_bloom_words(spark, path: str, key: str, files: list[str] | None = None) -> DataFrame:
-    """Bloom words for ``files`` of the table (all files when None),
-    reading only the key column (column-pruned scan).
+def _table_bloom_words(spark, path: str, key: str, files: list[str]) -> DataFrame:
+    """Bloom words for ``files`` of the table, reading only the key
+    column (column-pruned scan).
 
     Every file additionally gets one marker row (word_idx = -1, word = 0)
     so that EMPTY data files — a commit's writer can emit zero-row part
-    files — still appear in the sidecar: the sidecar-vs-listing
+    files — still appear in the sidecar: the sidecar-vs-manifest
     validation on load compares file sets, and a perpetually-absent
     empty file would force a cold rebuild on every upsert. Markers can
     never match a probe (probe word_idx ≥ 0)."""
-    import glob
-    import os
-
-    if files is None:
-        files = sorted(
-            os.path.basename(f)
-            for f in glob.glob(os.path.join(path, "*.parquet"))
-        )
-    src = spark.read.parquet(*[os.path.join(path, f) for f in files])
-    keyed = src.select(
+    keyed = _read_files(spark, path, files).select(
         F.element_at(F.split(F.input_file_name(), "/"), -1).alias("file"),
         F.col(key),
     )
@@ -936,12 +867,39 @@ def _bloom_probe_files(words: DataFrame, probe_keys: DataFrame, key: str) -> lis
     ]
 
 
-def _valid_sidecar_words(
-    spark, path: str, live_files: list[str], *, sidecar_dir: str = _BLOOM_DIR
+_RLI_DIR = "_rli"  # record-level index sidecar: (key, file) rows
+
+
+def _table_rli(spark, path: str, key: str, files: list[str]) -> DataFrame:
+    """(key, file) rows for ``files`` — one column-pruned scan. Every
+    file additionally gets one NULL-key marker row so EMPTY data files
+    still appear in the sidecar (same rationale as the bloom marker:
+    the consistency check compares file sets); NULL keys can never match
+    a probe."""
+    src = _read_files(spark, path, files)
+    rows = src.select(
+        F.col(key),
+        F.element_at(F.split(F.input_file_name(), "/"), -1).alias("file"),
+    )
+    markers = spark.createDataFrame([(f,) for f in files], "file string").select(
+        F.lit(None).cast(src.schema[key].dataType).alias(key), "file"
+    )
+    return rows.unionByName(markers)
+
+
+#: Sidecar directory of each index that keeps one (``"range"`` reads
+#: parquet footers, ``None`` reads nothing).
+_SIDECARS = {"bloom": _BLOOM_DIR, "record": _RLI_DIR}
+
+
+def _valid_sidecar(
+    spark, path: str, live_files: list[str], sidecar_dir: str
 ) -> DataFrame | None:
-    """The bloom sidecar relation if present AND consistent with the
-    manifest's live file set (see the crash-recovery rationale in
-    :func:`upsert_parquet_bloom_indexed`), else None."""
+    """The sidecar relation in ``sidecar_dir`` if present AND its file
+    set equals the manifest's live file set, else None. A crash between
+    a manifest publish and the sidecar rewrite leaves a sidecar missing
+    the new files; trusting it would skip them (bloom false negatives,
+    record-index misses) and a later upsert would duplicate keys."""
     import os
 
     sidecar = os.path.join(path, sidecar_dir)
@@ -952,6 +910,67 @@ def _valid_sidecar_words(
         r["file"] for r in candidate.select("file").distinct().collect()
     }
     return candidate if sidecar_files == set(live_files) else None
+
+
+def _load_sidecar(
+    spark, path: str, index: str, key: str, live_files: list[str]
+) -> DataFrame:
+    """``index``'s sidecar, cold-rebuilt from the live files (one
+    column-pruned key scan) when absent or stale."""
+    rel = _valid_sidecar(spark, path, live_files, _SIDECARS[index])
+    if rel is None:
+        build = _table_bloom_words if index == "bloom" else _table_rli
+        rel = build(spark, path, key, live_files)
+    return rel
+
+
+def _touched_files(
+    spark,
+    path: str,
+    index: str | None,
+    key: str,
+    live_files: list[str],
+    probe: DataFrame,
+    sidecar: DataFrame | None = None,
+) -> list[str]:
+    """The live files that can hold a ``key`` value of ``probe`` under
+    ``index`` — the one file-selection step shared by the writer (probe =
+    the batch) and :func:`read_point_lookup` (probe = the looked-up
+    values). ``sidecar`` is the loaded bloom/record relation for those
+    indexes; their probes are broadcast joins, so only file NAMES reach
+    the driver (Hudi's index-lookup contract).
+
+    ``"range"`` compares on the driver: the probe's keys are collected
+    (the batch is the small side by contract — :func:`merge_upsert`
+    broadcasts its keys anyway), sorted once, and each file's footer
+    [min, max] is one binary search — O((keys + files) · log keys), no
+    Spark job beyond the key collect.
+    """
+    import bisect
+
+    from .clustering import file_column_bounds
+
+    if index is None:
+        return list(live_files)
+    if index == "bloom":
+        return _bloom_probe_files(sidecar, probe, key)
+    if index == "record":
+        rows = sidecar.join(F.broadcast(probe.select(key)), on=key, how="left_semi")
+        return [r["file"] for r in rows.select("file").distinct().collect()]
+    if index != "range":
+        raise ValueError(f"unknown index {index!r}")
+    keys = sorted({r[0] for r in probe.select(key).collect() if r[0] is not None})
+
+    def meets(lo, hi) -> bool:
+        i = bisect.bisect_left(keys, lo)
+        return i < len(keys) and keys[i] <= hi
+
+    # An empty file holds no key; a file without footer stats may hold any.
+    return [
+        b["file"]
+        for b in file_column_bounds(path, [key], files=live_files)
+        if b["rows"] and (b[key][0] is None or meets(*b[key]))
+    ]
 
 
 def build_secondary_index(spark, path: str, col: str) -> int:
@@ -987,291 +1006,55 @@ def read_point_lookup(
     """Index-accelerated point read of a keyed COW table: scan ONLY the
     files that can contain the requested key values — the read-path twin
     of the write-side index pruning (Hudi serves point lookups through
-    the same bloom/column-stats metadata). Pruning source, best first:
+    the same bloom/column-stats metadata). Files are chosen by the
+    writer's own per-index step (:func:`upsert_parquet`'s ``index``),
+    using the best index the table carries:
 
-    1. the ``_bloom`` sidecar (when present and manifest-consistent) —
-       per-key membership, survives hash-scattered layouts;
-    2. parquet footer min/max ranges — effective on a
-       ``cluster_linear``-by-key layout;
-    3. no index ⇒ the full manifest-consistent file set (correct,
-       unpruned).
+    1. ``"record"`` — the ``_rli`` sidecar (exact key→file map);
+    2. ``"bloom"`` — the ``_bloom`` sidecar (per-key membership,
+       survives hash-scattered layouts);
+    3. ``"range"`` — parquet footer min/max ranges (effective on a
+       ``cluster_linear``-by-key layout; every file otherwise).
 
-    The residual ``key IN (values)`` filter always applies (bloom false
-    positives, range overlap), so results are exact regardless of which
-    index pruned. Returns an empty-but-typed frame when pruning
-    eliminates every file.
+    A sidecar is used only when present and manifest-consistent; a
+    reader never rebuilds one. The residual ``key IN (values)`` filter
+    always applies (bloom false positives, range overlap), so results
+    are exact regardless of which index pruned. Returns an
+    empty-but-typed frame when pruning eliminates every file.
 
     ``key`` may also be a NON-key column carrying a secondary index
     (:func:`build_secondary_index`): pass ``primary=False`` — the
     column-specific ``_bloom_<col>`` sidecar is used (else footer
-    ranges), and the bare ``_bloom`` sidecar is deliberately NOT
-    consulted: it holds record-key bits, and probing it with another
-    column's values would yield bloom false NEGATIVES — silently missing
-    rows, not just weaker pruning."""
-    import os
-
-    from .clustering import file_column_bounds
-
+    ranges), and the record-key sidecars are deliberately NOT
+    consulted: probing them with another column's values would yield
+    false NEGATIVES — silently missing rows, not just weaker pruning."""
     _, live_files = table_live_files(path)
     if not live_files:
         raise FileNotFoundError(f"no data files at {path!r}")
-    probe_df = spark.createDataFrame(
-        [(v,) for v in values],
-        spark.read.parquet(os.path.join(path, live_files[0])).select(key).schema,
+    import pandas as pd
+
+    # From pandas (Arrow) the probe is a LocalRelation: collecting or
+    # broadcasting it runs no Spark job, unlike a parallelized list.
+    probe = spark.createDataFrame(
+        pd.DataFrame({key: values}),
+        _read_files(spark, path, live_files[:1]).select(key).schema,
     )
-    # Exact record-level index first (primary lookups only — the RLI
-    # maps the RECORD key): no false positives, minimal file set.
+    sidecars = [("bloom", f"{_BLOOM_DIR}_{key}")]
     if primary:
-        rli = _valid_rli(spark, path, live_files)
-        if rli is not None:
-            candidates = [
-                r["file"]
-                for r in (
-                    rli.join(F.broadcast(probe_df), on=key, how="left_semi")
-                    .select("file")
-                    .distinct()
-                    .collect()
-                )
-            ]
-            reader = spark.read.parquet(
-                *[os.path.join(path, f) for f in (candidates or [live_files[0]])]
-            )
-            out = reader.filter(F.col(key).isin(values))
-            return out.limit(0) if not candidates else out
-    words = _valid_sidecar_words(
-        spark, path, live_files, sidecar_dir=f"{_BLOOM_DIR}_{key}"
+        sidecars = [("record", _RLI_DIR), *sidecars, ("bloom", _BLOOM_DIR)]
+    index, sidecar = "range", None
+    for idx, d in sidecars:
+        sidecar = _valid_sidecar(spark, path, live_files, d)
+        if sidecar is not None:
+            index = idx
+            break
+    candidates = _touched_files(spark, path, index, key, live_files, probe, sidecar)
+    out = _read_files(spark, path, candidates or live_files[:1]).filter(
+        F.col(key).isin(values)
     )
-    if words is None and primary:
-        words = _valid_sidecar_words(spark, path, live_files)
-    if words is not None:
-        candidates = _bloom_probe_files(words, probe_df, key)
-    else:
-        bounds = [
-            b
-            for b in file_column_bounds(path, [key], files=live_files)
-            if b[key][0] is not None
-        ]
-        if bounds:
-            candidates = [
-                b["file"]
-                for b in bounds
-                if any(b[key][0] <= v <= b[key][1] for v in values)
-            ]
-        else:
-            candidates = list(live_files)
-    reader = spark.read.parquet(
-        *[os.path.join(path, f) for f in (candidates or [live_files[0]])]
-    )
-    out = reader.filter(F.col(key).isin(values))
     # Empty candidate set: the filter on one real file yields the right
     # (empty) result with the table's schema.
-    return out.limit(0) if not candidates else out
-
-
-def upsert_parquet_bloom_indexed(
-    spark,
-    batch: DataFrame,
-    path: str,
-    key: str,
-    precombine: str,
-    *,
-    delete_col: str | None = None,
-) -> int:
-    """Bloom-indexed COW upsert — Hudi's DEFAULT index type
-    (``hoodie.index.type=BLOOM``; pipeline_architecture.py:183-192 runs
-    its upserts against exactly this index): each data file carries an
-    8 KiB bloom bitset over its record keys, a batch rewrites only the
-    files whose bloom *might* contain a batch key, and — unlike the
-    key-range SIMPLE index of :func:`upsert_parquet_indexed` — pruning
-    survives an UNCLUSTERED layout: membership is per-key, not per-range,
-    so scattered keys still skip every file they can't be in.
-
-    The index lives in a ``_bloom`` sidecar relation (underscore-prefixed
-    ⇒ invisible to table scans; Hudi stores the same bits in file footers
-    / its metadata table), maintained incrementally: only files written
-    by this commit get their blooms (re)computed, O(batch), never
-    O(table). Probing is a broadcast join of the tiny word relation
-    against the batch's distinct keys — a file is affected when all
-    BLOOM_HASHES bits of some batch key are set — so neither the batch
-    nor the table ever reaches the driver (only the affected-file NAME
-    list does, as with Hudi's index lookup).
-
-    Commit protocol: the manifest publish is the atomic commit point
-    (see the manifest-protocol block above); the sidecar is updated
-    post-commit and validated against the manifest on load, so a crash
-    anywhere leaves readers consistent and at worst costs one cold
-    index rebuild.
-    """
-    import os
-    import uuid
-
-    sidecar = os.path.join(path, _BLOOM_DIR)
-
-    if not os.path.isdir(path):
-        merged = merge_upsert(None, batch, [key], precombine, delete_col=delete_col)
-        n = _write_parquet_counted(merged, path)
-        version, live = table_live_files(path)
-        _manifest_publish(path, live, version + 1)
-        _table_bloom_words(spark, path, key, live).write.mode(
-            "overwrite"
-        ).parquet(sidecar)
-        return n
-
-    version, live_files = table_live_files(path)
-    # Load the sidecar only if its file set matches the manifest's live
-    # set (metadata-scale check): a crash between the manifest publish
-    # and the sidecar rewrite leaves a stale sidecar whose missing
-    # entries for new files yield bloom FALSE NEGATIVES — a later upsert
-    # would skip those files and write duplicate keys. On any mismatch,
-    # fall back to the cold rebuild (one column-pruned key scan over the
-    # manifest-listed files; orphaned pre-crash files are ignored).
-    words = _valid_sidecar_words(spark, path, live_files)
-    if words is None:
-        words = _table_bloom_words(spark, path, key, live_files)  # cold (re)build
-    # Materialize now (metadata-scale): the commit below deletes data
-    # files and overwrites the sidecar this lazy plan reads from.
-    words = words.localCheckpoint(eager=True)
-    affected = _bloom_probe_files(words, batch, key)
-    if affected:
-        existing_sub = spark.read.parquet(*[os.path.join(path, f) for f in affected])
-        merged = merge_upsert(existing_sub, batch, [key], precombine, delete_col=delete_col)
-    else:
-        merged = merge_upsert(None, batch, [key], precombine, delete_col=delete_col)
-
-    # Same stage → manifest-commit → clean protocol as the SIMPLE index.
-    staging = f"{path}/.staging-{uuid.uuid4().hex}"
-    merged.write.mode("overwrite").parquet(staging)
-    kept_files = [f for f in live_files if f not in set(affected)]
-    moved, n_written = _commit_staged(
-        spark, path, staging, version + 1, kept_files
-    )
-    # Post-commit incremental index maintenance: drop replaced files'
-    # words, add the new files' words — O(commit), the sidecar rewrite
-    # itself is metadata-scale. (words was materialized above; a crash
-    # before this line is healed by the manifest-mismatch cold rebuild.)
-    kept_words = words.filter(~F.col("file").isin(affected))
-    new_words = (
-        _table_bloom_words(spark, path, key, moved) if moved else None
-    )
-    out_words = (
-        kept_words.unionByName(new_words) if new_words is not None else kept_words
-    )
-    out_words.write.mode("overwrite").parquet(sidecar)
-    return n_written
-
-
-_RLI_DIR = "_rli"  # record-level index sidecar: (key, file) rows
-
-
-def _valid_rli(spark, path: str, live_files: list[str]) -> DataFrame | None:
-    """The record-level index relation if present AND consistent with
-    the manifest's live file set (same self-heal contract as the bloom
-    sidecar), else None."""
-    import os
-
-    d = os.path.join(path, _RLI_DIR)
-    if not os.path.isdir(d):
-        return None
-    candidate = spark.read.parquet(d)
-    rli_files = {r["file"] for r in candidate.select("file").distinct().collect()}
-    return candidate if rli_files == set(live_files) else None
-
-
-def _table_rli(spark, path: str, key: str, files: list[str]) -> DataFrame:
-    """(key, file) rows for ``files`` — one column-pruned scan. Every
-    file additionally gets one NULL-key marker row so EMPTY data files
-    still appear in the sidecar (same rationale as the bloom marker:
-    the consistency check compares file sets); NULL keys can never match
-    a probe."""
-    import os
-
-    src = spark.read.parquet(*[os.path.join(path, f) for f in files])
-    rows = src.select(
-        F.col(key),
-        F.element_at(F.split(F.input_file_name(), "/"), -1).alias("file"),
-    )
-    markers = spark.createDataFrame([(f,) for f in files], "file string").select(
-        F.lit(None).cast(src.schema[key].dataType).alias(key), "file"
-    )
-    return rows.unionByName(markers)
-
-
-def upsert_parquet_record_indexed(
-    spark,
-    batch: DataFrame,
-    path: str,
-    key: str,
-    precombine: str,
-    *,
-    delete_col: str | None = None,
-) -> int:
-    """Record-level-indexed COW upsert — Hudi 1.0's RECORD_INDEX
-    (``hoodie.index.type=RECORD_INDEX``): an EXACT key→file mapping in a
-    ``_rli`` sidecar decides file affectedness — no false positives
-    (bloom) and no layout dependence (range), at the cost of an index
-    whose size is O(table keys) rather than O(files). That is exactly
-    Hudi's trade: the RLI lives in its metadata table, hash-bucketed by
-    key; here it is a parquet relation joined column-pruned.
-
-    Probe shape: batch keys (small side, broadcast) semi-join the index
-    — the index scan reads two thin columns, the table reads nothing;
-    only affected file NAMES reach the driver. Inserts (keys absent from
-    the index) rewrite nothing and land as new files. Maintenance is
-    incremental per commit: replaced files' rows drop, new files' rows
-    append — O(commit), never O(table).
-
-    Same manifest-CAS commit protocol as the other indexed writers;
-    the sidecar self-heals by manifest-mismatch cold rebuild.
-    Returns rows written.
-    """
-    import os
-    import uuid
-
-    if not os.path.isdir(path):
-        merged = merge_upsert(None, batch, [key], precombine, delete_col=delete_col)
-        n = _write_parquet_counted(merged, path)
-        version, live = table_live_files(path)
-        _manifest_publish(path, live, version + 1)
-        _table_rli(spark, path, key, live).write.mode("overwrite").parquet(
-            os.path.join(path, _RLI_DIR)
-        )
-        return n
-
-    version, live_files = table_live_files(path)
-    rli = _valid_rli(spark, path, live_files)
-    if rli is None:
-        rli = _table_rli(spark, path, key, live_files)  # cold rebuild
-    # Materialize: the commit below deletes files this lazy plan reads.
-    rli = rli.localCheckpoint(eager=True)
-    batch_keys = batch.select(F.col(key)).distinct()
-    affected = [
-        r["file"]
-        for r in (
-            rli.join(F.broadcast(batch_keys), on=key, how="left_semi")
-            .select("file")
-            .distinct()
-            .collect()
-        )
-    ]
-    if affected:
-        existing_sub = spark.read.parquet(*[os.path.join(path, f) for f in affected])
-        merged = merge_upsert(existing_sub, batch, [key], precombine, delete_col=delete_col)
-    else:
-        merged = merge_upsert(None, batch, [key], precombine, delete_col=delete_col)
-
-    staging = f"{path}/.staging-{uuid.uuid4().hex}"
-    merged.write.mode("overwrite").parquet(staging)
-    kept_files = [f for f in live_files if f not in set(affected)]
-    moved, n_written = _commit_staged(spark, path, staging, version + 1, kept_files)
-    # Incremental index maintenance: O(commit).
-    kept_rows = rli.filter(~F.col("file").isin(affected))
-    out_rows = (
-        kept_rows.unionByName(_table_rli(spark, path, key, moved))
-        if moved
-        else kept_rows
-    )
-    out_rows.write.mode("overwrite").parquet(os.path.join(path, _RLI_DIR))
-    return n_written
+    return out if candidates else out.limit(0)
 
 
 def recluster_indexed_table(
@@ -1284,7 +1067,7 @@ def recluster_indexed_table(
     upserts degraded the layout. Data is untouched — only arrangement.
 
     Runs through the same stage → manifest-CAS-commit → clean protocol
-    as the indexed writers: readers see the old arrangement or the new
+    as :func:`upsert_parquet`: readers see the old arrangement or the new
     one, never a mix, and a concurrent upsert racing this service loses
     (or wins) the manifest version atomically
     (:class:`ConcurrentCommitError`). One shuffle (range partition by
@@ -1298,22 +1081,19 @@ def recluster_indexed_table(
     ranges tighten simultaneously, so skipping works for predicates on
     EITHER column, at the cost of looser single-column ranges than the
     linear layout."""
-    import uuid
-
     from .clustering import cluster_linear, cluster_zorder
 
     version, live_files = table_live_files(path)
     if not live_files:
         raise FileNotFoundError(f"no data files at {path!r}")
-    current = read_indexed_table(spark, path)
-    staging = f"{path}/.staging-{uuid.uuid4().hex}"
+    current = _read_files(spark, path, live_files)
     clustered = (
         cluster_zorder(current, key, zorder_with, n_files)
         if zorder_with is not None
         else cluster_linear(current, [key], n_files)
     )
-    clustered.write.mode("overwrite").parquet(staging)
-    _, n_written = _commit_staged(spark, path, staging, version + 1, kept=[])
+    staging, n_written = _stage(clustered, path)
+    _commit_staged(path, staging, version + 1, kept=[], replaced=live_files)
     return n_written
 
 

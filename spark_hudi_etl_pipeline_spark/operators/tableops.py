@@ -18,13 +18,13 @@ Scale notes (100 TB table, incremental batch):
   read or shuffle (Hudi records replacecommit instants for this).
 - ``bulk_insert`` is the initial-load path: no merge, no index — just
   layout control. GLOBAL_SORT range-partitions + sorts so parquet
-  footers carry disjoint key ranges (what makes the SIMPLE file index
-  of ``merge.upsert_parquet_indexed`` prune later); PARTITION_SORT
+  footers carry disjoint key ranges (what makes the SIMPLE file index,
+  ``merge.upsert_parquet(index="range")``, prune later); PARTITION_SORT
   sorts within existing partitions (no shuffle); NONE writes as-is.
 - the GLOBAL-index upsert reads (key, partition) column-pruned from the
   table to locate each batch key's current partition — Hudi's
   GLOBAL_SIMPLE index does exactly this scan; GLOBAL_BLOOM replaces it
-  with per-file bloom probes (see ``merge.upsert_parquet_bloom_indexed``
+  with per-file bloom probes (see ``merge.upsert_parquet(index="bloom")``
   for that machinery on flat tables). The merge itself then touches only
   the partitions involved on either side.
 """
@@ -137,7 +137,7 @@ def bulk_insert(
     - ``GLOBAL_SORT`` (Hudi's default): range-partition + sort by
       ``sort_cols`` so each output file covers a disjoint key range —
       parquet footer min/max become a usable file index (the layout
-      ``merge.upsert_parquet_indexed`` prunes on) and later range scans
+      ``merge.upsert_parquet(index="range")`` prunes on) and later range scans
       skip files. One shuffle, the right trade for a load that will be
       upserted against forever after.
     - ``PARTITION_SORT``: sort within existing partitions only — no

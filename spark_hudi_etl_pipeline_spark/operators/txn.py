@@ -60,7 +60,7 @@ from pyspark.sql import DataFrame
 from .merge import (
     ConcurrentCommitError,
     manifest_files_at,
-    upsert_parquet_indexed,
+    upsert_parquet,
 )
 
 _CATALOG_DIR = "_catalog"
@@ -220,8 +220,8 @@ def txn_commit(
         # re-read of the latest manifest: a concurrent per-table publish
         # landing between our commit and a re-read would be silently
         # adopted (and attested) by this transaction's catalog CAS.
-        result = upsert_parquet_indexed(
-            spark, batch, path, key, precombine,
+        result = upsert_parquet(
+            spark, batch, path, [key], precombine, index="range",
             clean=False, base_version=tables.get(name),
             delete_col=delete_col,
         )

@@ -3,8 +3,8 @@
 The pattern (popularized by Netflix on Iceberg; Hudi ships it as
 pre-commit validators — reference README's quality aspirations made
 real): a batch's merged result is STAGED as uncommitted data files,
-AUDITED in place, and only PUBLISHED — one atomic manifest write, the
-same `_manifest/vN.json` protocol as the indexed COW writers in
+AUDITED in the staging directory, and only PUBLISHED — through the same
+move-in + `_manifest/vN.json` commit tail as ``upsert_parquet`` in
 operators/merge.py — when every check passes. A failing audit aborts
 with the live table untouched; readers can never observe unaudited
 rows because the staged files are unreferenced until the publish.
@@ -17,17 +17,13 @@ files — all O(batch) beyond the audit scan itself.
 
 from __future__ import annotations
 
-import glob
-import os
-import shutil
-import uuid
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 
 from .merge import (
-    _manifest_publish,
-    align_schemas,
+    _commit_staged,
+    _stage,
     merge_upsert,
     read_indexed_table,
     table_live_files,
@@ -74,48 +70,24 @@ def wap_upsert(
 
     Returns the newly published manifest version.
     """
+    import shutil
+
     version, live = table_live_files(path)
     state = read_indexed_table(spark, path) if live else None
-    if state is not None and evolve_schema:
-        state, batch = align_schemas(state, batch)
-    merged = merge_upsert(state, batch, keys, precombine)
+    merged = merge_upsert(state, batch, keys, precombine, evolve_schema=evolve_schema)
 
-    # WRITE: full COW rewrite into uncommitted files (unique names so a
-    # crashed attempt can never collide with a later one).
-    staging = os.path.join(path, f"_wap_staging-{uuid.uuid4().hex}")
-    merged.write.mode("overwrite").parquet(staging)
-    moved: list[str] = []
-    try:
-        for i, f in enumerate(sorted(glob.glob(f"{staging}/*.parquet"))):
-            dest = os.path.join(
-                path, f"part-wap-{uuid.uuid4().hex}-{i:05d}.parquet"
-            )
-            shutil.move(f, dest)
-            moved.append(os.path.basename(dest))
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
+    # WRITE: full COW rewrite into a staging directory (invisible to
+    # table scans and to every manifest).
+    staging, _ = _stage(merged, path)
 
     # AUDIT the candidate exactly as readers would see it post-publish.
     if audit is not None:
-        candidate = spark.read.parquet(
-            *[os.path.join(path, m) for m in moved]
-        )
-        violations = audit(candidate).limit(AUDIT_SAMPLE_ROWS).collect()
+        violations = audit(spark.read.parquet(staging)).limit(AUDIT_SAMPLE_ROWS).collect()
         if violations:
-            for m in moved:  # abort: staged files were never referenced
-                try:
-                    os.remove(os.path.join(path, m))
-                except OSError:
-                    pass
+            shutil.rmtree(staging, ignore_errors=True)  # abort: never referenced
             raise AuditFailure(violations)
 
-    # PUBLISH: one atomic manifest write — the commit point.
-    _manifest_publish(path, sorted(moved), version + 1)
-    # Post-commit cleaner: files the new manifest no longer references.
-    for f in glob.glob(os.path.join(path, "*.parquet")):
-        if os.path.basename(f) not in moved:
-            try:
-                os.remove(f)
-            except OSError:
-                pass
+    # PUBLISH: move in + one atomic manifest write — the commit point —
+    # then clean the files it replaced.
+    _commit_staged(path, staging, version + 1, kept=[], replaced=live)
     return version + 1

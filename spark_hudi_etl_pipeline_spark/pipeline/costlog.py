@@ -49,7 +49,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..operators.merge import upsert_parquet
+from ..operators.merge import read_indexed_table, upsert_parquet
 from .runlog import now_ms
 
 COST_SCHEMA = StructType(
@@ -111,6 +111,22 @@ def plan_shape(df: DataFrame) -> dict[str, int]:
     }
 
 
+def job_group_footprint(spark: SparkSession, group: str) -> dict[str, int]:
+    """``n_jobs`` / ``n_tasks`` the status tracker recorded for job
+    group ``group`` — the run's execution footprint, read off its own
+    jobs (no re-execution)."""
+    tracker = spark.sparkContext.statusTracker()
+    job_ids = tracker.getJobIdsForGroup(group) or []
+    n_tasks = 0
+    for jid in job_ids:
+        info = tracker.getJobInfo(jid)
+        for sid in info.stageIds if info is not None else []:
+            sinfo = tracker.getStageInfo(sid)
+            if sinfo is not None:
+                n_tasks += int(sinfo.numTasks)
+    return {"n_jobs": len(job_ids), "n_tasks": n_tasks}
+
+
 def profile_run(
     spark: SparkSession, df: DataFrame, query_name: str
 ) -> dict[str, object]:
@@ -129,23 +145,11 @@ def profile_run(
     finally:
         sc.setJobGroup(None, None)
     wall = time.perf_counter() - t0
-    tracker = sc.statusTracker()
-    job_ids = tracker.getJobIdsForGroup(group) or []
-    n_tasks = 0
-    for jid in job_ids:
-        info = tracker.getJobInfo(jid)
-        if info is None:
-            continue
-        for sid in info.stageIds:
-            sinfo = tracker.getStageInfo(sid)
-            if sinfo is not None:
-                n_tasks += int(sinfo.numTasks)
     return {
         "query_name": query_name,
         "rows_out": int(obs.get["rows_out"]),
         "wall_sec": round(wall, 3),
-        "n_jobs": len(job_ids),
-        "n_tasks": n_tasks,
+        **job_group_footprint(spark, group),
         **shape,
         "created_at": now_ms(),
     }
@@ -171,7 +175,7 @@ def cost_report(spark: SparkSession, cost_path: str) -> DataFrame:
     """Per-query rollup over the cost table: run count, wall stats, and
     the LATEST run's plan-shape counters (argmax by created_at — a plan
     regression shows as a counter change between report snapshots)."""
-    log = spark.read.parquet(cost_path)
+    log = read_indexed_table(spark, cost_path)
     w_latest = F.max(F.struct("created_at", "shuffle_exchanges")).alias("_l")
     return (
         log.groupBy("query_name")

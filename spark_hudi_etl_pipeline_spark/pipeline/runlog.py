@@ -33,7 +33,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..operators.merge import upsert_parquet
+from ..operators.merge import read_indexed_table, upsert_parquet
 
 #: Reference log schema (pipeline_architecture.py:166-175), verbatim.
 LOG_SCHEMA = StructType(
@@ -100,10 +100,11 @@ def get_last_run_timestamp(
     """Watermark read (reference :128-148): most recent SUCCESS run's
     ``current_run_timestamp``; ``None`` on first run OR on any error —
     error ⇒ full reload is the reference's deliberate recovery semantic
-    (:143-148)."""
+    (:143-148). Reads the log's latest manifest, so a log row whose
+    commit never published cannot advance the watermark."""
     try:
         row = (
-            spark.read.parquet(log_path)
+            read_indexed_table(spark, log_path)
             .filter(
                 (F.col("pipeline_name") == pipeline_name)
                 & (F.col("status") == STATUS_SUCCESS)
@@ -127,7 +128,7 @@ def get_pipeline_status(
     """Status report (reference :337-369): runs in the lookback window,
     newest first, with epoch-ms columns rendered as timestamps."""
     cutoff_ms = now_ms() - days * 24 * 3600 * 1000
-    log = spark.read.parquet(log_path)
+    log = read_indexed_table(spark, log_path)
     if pipeline_name is not None:
         log = log.filter(F.col("pipeline_name") == pipeline_name)
     return (

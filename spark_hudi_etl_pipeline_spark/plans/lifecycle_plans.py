@@ -435,21 +435,19 @@ ORDER BY o_orderkey
 """,
 )
 def indexed_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.merge import (
-        read_point_lookup,
-        upsert_parquet_bloom_indexed,
-    )
+    from ..operators.merge import read_point_lookup, upsert_parquet
 
     cols = ["o_orderkey", "o_custkey", "o_totalprice", "o_orderdate"]
     orders = load_table(spark, sf_dir, "orders").select(*cols)
     path = _scratch(sf_dir, "point_lookup")
-    # First write through the bloom writer: data + manifest + sidecar.
-    upsert_parquet_bloom_indexed(
+    # First write with the bloom index: data + manifest + sidecar.
+    upsert_parquet(
         spark,
         orders.repartition(16, F.col("o_orderkey")),
         path,
-        "o_orderkey",
+        ["o_orderkey"],
         "o_orderdate",
+        index="bloom",
     )
     return (
         read_point_lookup(spark, path, "o_orderkey", _LOOKUP_KEYS)
@@ -1187,20 +1185,18 @@ ORDER BY o_orderkey
 """,
 )
 def upsert_record_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.merge import (
-        read_indexed_table,
-        upsert_parquet_record_indexed,
-    )
+    from ..operators.merge import read_indexed_table, upsert_parquet
 
     cols = ["o_orderkey", "o_custkey", "o_totalprice", "o_orderdate"]
     orders = load_table(spark, sf_dir, "orders").select(*cols)
     path = _scratch(sf_dir, "rli_upsert")
-    upsert_parquet_record_indexed(
+    upsert_parquet(
         spark,
         orders.repartition(16, F.col("o_orderkey")),
         path,
-        "o_orderkey",
+        ["o_orderkey"],
         "o_orderdate",
+        index="record",
     )
     updates = (
         orders.filter(F.col("o_orderkey") % 9 == 0)
@@ -1210,8 +1206,9 @@ def upsert_record_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     inserts = orders.filter(F.col("o_orderkey") % 333 == 0).withColumn(
         "o_orderkey", F.col("o_orderkey") + 1000000000
     )
-    upsert_parquet_record_indexed(
-        spark, updates.unionByName(inserts), path, "o_orderkey", "o_orderdate"
+    upsert_parquet(
+        spark, updates.unionByName(inserts), path, ["o_orderkey"], "o_orderdate",
+        index="record",
     )
     return (
         read_indexed_table(spark, path)
@@ -1302,18 +1299,19 @@ def recluster_scan_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.merge import (
         read_indexed_table,
         recluster_indexed_table,
-        upsert_parquet_bloom_indexed,
+        upsert_parquet,
     )
 
     cols = ["o_orderkey", "o_custkey", "o_totalprice", "o_orderdate"]
     orders = load_table(spark, sf_dir, "orders").select(*cols)
     path = _scratch(sf_dir, "recluster_eq")
-    upsert_parquet_bloom_indexed(
+    upsert_parquet(
         spark,
         orders.repartition(16, F.col("o_orderkey")),
         path,
-        "o_orderkey",
+        ["o_orderkey"],
         "o_orderdate",
+        index="bloom",
     )
     recluster_indexed_table(spark, path, "o_orderkey", n_files=8)
     return (
@@ -1864,7 +1862,7 @@ ORDER BY src, o_orderstatus
 """,
 )
 def multi_table_txn_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.merge import upsert_parquet_indexed
+    from ..operators.merge import upsert_parquet
     from ..operators.txn import read_table_at_catalog, txn_commit
 
     root = _scratch(sf_dir, "txn_cat")
@@ -1917,8 +1915,9 @@ def multi_table_txn_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
     torn = orders.filter(F.col("o_orderkey") % 9 == 0).withColumn(
         "o_totalprice", F.col("o_totalprice") * 3.0
     ).withColumn("o_orderdate", F.col("o_orderdate") + F.expr("INTERVAL 9 DAYS"))
-    upsert_parquet_indexed(
-        spark, torn, base_path, "o_orderkey", "o_orderdate", clean=False
+    upsert_parquet(
+        spark, torn, base_path, ["o_orderkey"], "o_orderdate", index="range",
+        clean=False,
     )
 
     agg_read = read_table_at_catalog(spark, root, "status_agg", agg_path).select(
@@ -2265,7 +2264,7 @@ def symlink_manifest_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     import glob as _glob
 
     from ..operators.clustering import cluster_linear, write_clustered
-    from ..operators.merge import upsert_parquet_indexed
+    from ..operators.merge import upsert_parquet
     from ..operators.tableops import (
         export_symlink_manifest,
         read_via_symlink_manifest,
@@ -2282,7 +2281,9 @@ def symlink_manifest_read(spark: SparkSession, sf_dir: str) -> DataFrame:
             "o_orderdate", F.col("o_orderdate") + F.expr("INTERVAL 30 DAYS")
         )
     )
-    upsert_parquet_indexed(spark, updates, path, "o_orderkey", "o_orderdate")
+    upsert_parquet(
+        spark, updates, path, ["o_orderkey"], "o_orderdate", index="range"
+    )
     # A crash-orphan the external engine must never see.
     orders.limit(5).write.mode("overwrite").parquet(f"{path}/__orphan_src")
     src = _glob.glob(f"{path}/__orphan_src/*.parquet")[0]

@@ -1118,8 +1118,8 @@ def upsert_partition_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# File-level indexed upsert (operators/merge.py::upsert_parquet_indexed
-# — Hudi SIMPLE-index COW write): orders is linear-clustered by key so
+# File-level indexed upsert (operators/merge.py::upsert_parquet with
+# index="range" — Hudi SIMPLE-index COW write): orders is linear-clustered by key so
 # parquet footers give disjoint key ranges, then a batch of updates
 # (keys %9, ×2, +30d) and out-of-range inserts merges in, rewriting only
 # intersecting files (file-mtime evidence in
@@ -1161,7 +1161,7 @@ def upsert_file_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     from ..operators.clustering import cluster_linear, write_clustered
-    from ..operators.merge import upsert_parquet_indexed
+    from ..operators.merge import upsert_parquet
 
     cols = ["o_orderkey", "o_custkey", "o_totalprice", "o_orderdate"]
     orders = load_table(spark, sf_dir, "orders").select(*cols)
@@ -1177,12 +1177,13 @@ def upsert_file_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     inserts = orders.filter(F.col("o_orderkey") % 333 == 0).withColumn(
         "o_orderkey", F.col("o_orderkey") + 1000000000
     )
-    upsert_parquet_indexed(
+    upsert_parquet(
         spark,
         updates.unionByName(inserts),
         path,
-        "o_orderkey",
+        ["o_orderkey"],
         "o_orderdate",
+        index="range",
     )
     return (
         spark.read.parquet(path)
@@ -1197,8 +1198,8 @@ def upsert_file_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Bloom-indexed upsert (operators/merge.py::upsert_parquet_bloom_indexed
-# — Hudi BLOOM-index COW write, Hudi's default index): orders is written
+# Bloom-indexed upsert (operators/merge.py::upsert_parquet with
+# index="bloom" — Hudi BLOOM-index COW write, Hudi's default index): orders is written
 # hash-scattered (repartition by key — every file's key RANGE spans the
 # domain, so range pruning would degrade to a full rewrite), then the
 # same update/insert batch merges in; per-file bloom bitsets still
@@ -1240,7 +1241,7 @@ ORDER BY o_orderkey
 def upsert_bloom_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
-    from ..operators.merge import upsert_parquet_bloom_indexed
+    from ..operators.merge import upsert_parquet
 
     cols = ["o_orderkey", "o_custkey", "o_totalprice", "o_orderdate"]
     orders = load_table(spark, sf_dir, "orders").select(*cols)
@@ -1256,12 +1257,13 @@ def upsert_bloom_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     inserts = orders.filter(F.col("o_orderkey") % 333 == 0).withColumn(
         "o_orderkey", F.col("o_orderkey") + 1000000000
     )
-    upsert_parquet_bloom_indexed(
+    upsert_parquet(
         spark,
         updates.unionByName(inserts),
         path,
-        "o_orderkey",
+        ["o_orderkey"],
         "o_orderdate",
+        index="bloom",
     )
     return (
         spark.read.parquet(path)
@@ -2328,7 +2330,7 @@ def vacuum_scan_invariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.clustering import cluster_linear, write_clustered
     from ..operators.merge import (
         read_indexed_table,
-        upsert_parquet_indexed,
+        upsert_parquet,
         vacuum_orphans,
     )
 
@@ -2345,7 +2347,9 @@ def vacuum_scan_invariance(spark: SparkSession, sf_dir: str) -> DataFrame:
             "o_orderdate", F.col("o_orderdate") + F.expr("INTERVAL 30 DAYS")
         )
     )
-    upsert_parquet_indexed(spark, updates, path, "o_orderkey", "o_orderdate")
+    upsert_parquet(
+        spark, updates, path, ["o_orderkey"], "o_orderdate", index="range"
+    )
     # Plant a crash-orphan (pre-crash staged move, manifest never
     # published) backdated past the retention floor, and a YOUNG one
     # that must survive (could be an in-flight commit's staged file).

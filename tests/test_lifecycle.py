@@ -354,15 +354,13 @@ def test_timeline_cdc_bounded_window(spark, tmp_table):
 def test_point_lookup_bloom_prunes_files(spark, tmp_table):
     from spark_hudi_etl_pipeline_spark.operators.merge import (
         read_point_lookup,
-        upsert_parquet_bloom_indexed,
+        upsert_parquet,
     )
 
     df = spark.range(0, 20000).select(
         F.col("id").alias("k"), (F.col("id") * 2).alias("v")
     )
-    upsert_parquet_bloom_indexed(
-        spark, df.repartition(16, "k"), tmp_table, "k", "v"
-    )
+    upsert_parquet(spark, df.repartition(16, "k"), tmp_table, ["k"], "v", index="bloom")
     out = read_point_lookup(spark, tmp_table, "k", [5, 7777])
     assert {tuple(r) for r in out.collect()} == {(5, 10), (7777, 15554)}
     n_total = len(glob.glob(f"{tmp_table}/*.parquet"))
@@ -391,11 +389,11 @@ def test_point_lookup_range_prunes_on_clustered_layout(spark, tmp_table):
 def test_point_lookup_missing_key_empty(spark, tmp_table):
     from spark_hudi_etl_pipeline_spark.operators.merge import (
         read_point_lookup,
-        upsert_parquet_bloom_indexed,
+        upsert_parquet,
     )
 
     df = spark.range(0, 1000).select(F.col("id").alias("k"), F.col("id").alias("v"))
-    upsert_parquet_bloom_indexed(spark, df, tmp_table, "k", "v")
+    upsert_parquet(spark, df, tmp_table, ["k"], "v", index="bloom")
     out = read_point_lookup(spark, tmp_table, "k", [999999])
     assert out.count() == 0
     assert out.columns == ["k", "v"]
@@ -451,16 +449,14 @@ def test_recluster_restores_disjoint_ranges(spark, tmp_table):
         read_indexed_table,
         recluster_indexed_table,
         table_live_files,
-        upsert_parquet_bloom_indexed,
+        upsert_parquet,
     )
 
     df = spark.range(0, 20000).select(
         F.col("id").alias("k"), (F.col("id") * 2).alias("v")
     )
     # Hash-scattered first write: every file's key range spans the domain.
-    upsert_parquet_bloom_indexed(
-        spark, df.repartition(8, "k"), tmp_table, "k", "v"
-    )
+    upsert_parquet(spark, df.repartition(8, "k"), tmp_table, ["k"], "v", index="bloom")
     v0, _ = table_live_files(tmp_table)
     before = {tuple(r) for r in read_indexed_table(spark, tmp_table).collect()}
     n = recluster_indexed_table(spark, tmp_table, "k", n_files=8)
@@ -563,13 +559,13 @@ def test_secondary_lookup_never_probes_key_bloom(spark, tmp_table):
     (whose bits would produce false negatives for another column)."""
     from spark_hudi_etl_pipeline_spark.operators.merge import (
         read_point_lookup,
-        upsert_parquet_bloom_indexed,
+        upsert_parquet,
     )
 
     df = spark.range(0, 5000).select(
         F.col("id").alias("k"), (F.col("id") % 7).alias("c")
     )
-    upsert_parquet_bloom_indexed(spark, df.repartition(8, "k"), tmp_table, "k", "c")
+    upsert_parquet(spark, df.repartition(8, "k"), tmp_table, ["k"], "c", index="bloom")
     out = read_point_lookup(spark, tmp_table, "c", [3], primary=False)
     assert out.count() == df.filter("c = 3").count()  # exact despite no index
 
@@ -673,7 +669,7 @@ def test_recluster_zorder_tightens_both_columns(spark, tmp_table):
         read_indexed_table,
         recluster_indexed_table,
         table_live_files,
-        upsert_parquet_bloom_indexed,
+        upsert_parquet,
     )
 
     # Two independent uniform columns: z-order should localize both.
@@ -682,7 +678,7 @@ def test_recluster_zorder_tightens_both_columns(spark, tmp_table):
         ((F.col("id") * 2654435761) % 10000).alias("y"),
         F.col("id").alias("v"),
     )
-    upsert_parquet_bloom_indexed(spark, df.repartition(8, "k"), tmp_table, "k", "v")
+    upsert_parquet(spark, df.repartition(8, "k"), tmp_table, ["k"], "v", index="bloom")
     before = {tuple(r) for r in read_indexed_table(spark, tmp_table).collect()}
     n = recluster_indexed_table(spark, tmp_table, "k", n_files=16, zorder_with="y")
     assert n == 20000
@@ -728,7 +724,7 @@ def test_stale_secondary_sidecar_safe_after_recluster(spark, tmp_table):
         build_secondary_index,
         read_point_lookup,
         recluster_indexed_table,
-        upsert_parquet_bloom_indexed,
+        upsert_parquet,
     )
 
     df = spark.range(0, 10000).select(
@@ -736,7 +732,7 @@ def test_stale_secondary_sidecar_safe_after_recluster(spark, tmp_table):
         (F.col("id") / F.lit(625)).cast("int").alias("c"),
         F.col("id").alias("v"),
     )
-    upsert_parquet_bloom_indexed(spark, df.repartition(8, "k"), tmp_table, "k", "v")
+    upsert_parquet(spark, df.repartition(8, "k"), tmp_table, ["k"], "v", index="bloom")
     build_secondary_index(spark, tmp_table, "c")
     recluster_indexed_table(spark, tmp_table, "k", n_files=8)
     # Stale sidecar must NOT be consulted: result stays exact.
@@ -756,26 +752,27 @@ def test_record_index_exact_pruning(spark, tmp_table):
     from spark_hudi_etl_pipeline_spark.operators.merge import (
         read_indexed_table,
         read_point_lookup,
-        upsert_parquet_record_indexed,
+        upsert_parquet,
     )
 
     df = spark.range(0, 20000).select(
         F.col("id").alias("k"), (F.col("id") * 2).alias("v")
     )
-    upsert_parquet_record_indexed(
-        spark, df.repartition(16, "k"), tmp_table, "k", "v"
+    upsert_parquet(
+        spark, df.repartition(16, "k"), tmp_table, ["k"], "v", index="record"
     )
     files_before = {
         f: os.path.getmtime(f) for f in glob.glob(f"{tmp_table}/*.parquet")
     }
     assert len(files_before) >= 8
     # Update ONE key: exactly one file should be rewritten.
-    upsert_parquet_record_indexed(
+    upsert_parquet(
         spark,
         spark.createDataFrame([(7777, 99999)], "k long, v long"),
         tmp_table,
-        "k",
+        ["k"],
         "v",
+        index="record",
     )
     files_after = {
         f: os.path.getmtime(f) for f in glob.glob(f"{tmp_table}/*.parquet")
@@ -788,12 +785,13 @@ def test_record_index_exact_pruning(spark, tmp_table):
     assert got == {(7777, 99999), (7778, 15556)}
     # Pure insert (key outside the index): nothing rewritten, one new file.
     n_before = len(files_after)
-    upsert_parquet_record_indexed(
+    upsert_parquet(
         spark,
         spark.createDataFrame([(10**9, 10**9 * 3)], "k long, v long"),
         tmp_table,
-        "k",
+        ["k"],
         "v",
+        index="record",
     )
     files_final = {
         f: os.path.getmtime(f) for f in glob.glob(f"{tmp_table}/*.parquet")
@@ -811,15 +809,19 @@ def test_record_index_stale_sidecar_rebuilds(spark, tmp_table):
 
     from spark_hudi_etl_pipeline_spark.operators.merge import (
         read_indexed_table,
-        upsert_parquet_record_indexed,
+        upsert_parquet,
     )
 
     df = spark.range(0, 2000).select(F.col("id").alias("k"), F.col("id").alias("v"))
-    upsert_parquet_record_indexed(spark, df, tmp_table, "k", "v")
+    upsert_parquet(spark, df, tmp_table, ["k"], "v", index="record")
     shutil.rmtree(f"{tmp_table}/_rli")  # simulate crash-before-sidecar
-    upsert_parquet_record_indexed(
-        spark, spark.createDataFrame([(5, 99)], "k long, v long"),
-        tmp_table, "k", "v",
+    upsert_parquet(
+        spark,
+        spark.createDataFrame([(5, 99)], "k long, v long"),
+        tmp_table,
+        ["k"],
+        "v",
+        index="record",
     )
     got = read_indexed_table(spark, tmp_table)
     assert got.count() == 2000  # cold rebuild, no duplicate key 5
@@ -900,7 +902,7 @@ def test_symlink_manifest_atomic_and_exact(spark, tmp_path):
     from spark_hudi_etl_pipeline_spark.operators.merge import (
         read_indexed_table,
         table_live_files,
-        upsert_parquet_indexed,
+        upsert_parquet,
     )
     from spark_hudi_etl_pipeline_spark.operators.tableops import (
         export_symlink_manifest,
@@ -912,9 +914,7 @@ def test_symlink_manifest_atomic_and_exact(spark, tmp_path):
     cols = ["o_orderkey", "o_custkey", "o_totalprice", "o_orderdate"]
     orders = load_table(spark, SF_SMALL, "orders").select(*cols)
     path = str(tmp_path / "tbl")
-    upsert_parquet_indexed(
-        spark, orders, path, "o_orderkey", "o_orderdate"
-    )
+    upsert_parquet(spark, orders, path, ["o_orderkey"], "o_orderdate", index="range")
     m1 = export_symlink_manifest(path)
     _, live1 = table_live_files(path)
     listed1 = {
@@ -927,7 +927,7 @@ def test_symlink_manifest_atomic_and_exact(spark, tmp_path):
     upd = orders.limit(50).withColumn(
         "o_totalprice", F.col("o_totalprice") + 1.0
     ).withColumn("o_orderdate", F.col("o_orderdate") + F.expr("INTERVAL 1 DAYS"))
-    upsert_parquet_indexed(spark, upd, path, "o_orderkey", "o_orderdate")
+    upsert_parquet(spark, upd, path, ["o_orderkey"], "o_orderdate", index="range")
     m2 = export_symlink_manifest(path)
     assert m2 == m1  # same target path, atomically replaced
     assert not os.path.exists(m2 + ".tmp")

@@ -150,8 +150,10 @@ def test_rerun_idempotent(spark, table):
 
 
 # ---------------------------------------------------------------------------
-# File-level indexed upsert (upsert_parquet_indexed): footer key ranges
-# as the write index on a linear-clustered layout.
+# Indexed upserts (upsert_parquet with index="range" | "bloom" | "record"):
+# the index decides which live files a batch rewrites — footer key ranges
+# on a linear-clustered layout, per-file blooms or the exact record index
+# on any layout — and never changes the result.
 # ---------------------------------------------------------------------------
 
 
@@ -159,7 +161,7 @@ from spark_hudi_etl_pipeline_spark.operators.clustering import (
     cluster_linear,
     write_clustered,
 )
-from spark_hudi_etl_pipeline_spark.operators.merge import upsert_parquet_indexed
+from spark_hudi_etl_pipeline_spark.operators.merge import upsert_parquet
 
 KSCHEMA = "k long, v string, prec long"
 
@@ -181,69 +183,6 @@ def keyed_table(spark, tmp_path):
     return path
 
 
-def test_indexed_upsert_rewrites_only_intersecting_files(spark, keyed_table):
-    before = all_files(keyed_table)
-    batch = spark.createDataFrame([(3, "v3-new", 2), (7, "v7-new", 2)], KSCHEMA)
-    upsert_parquet_indexed(spark, batch, keyed_table, "k", "prec")
-    after = all_files(keyed_table)
-    survivors = set(before) & set(after)
-    # Exactly one file (the 0..19 range) replaced; the other four intact.
-    assert len(set(before) - survivors) == 1
-    assert all(after[f] == before[f] for f in survivors)
-    out = {(r["k"], r["v"]) for r in spark.read.parquet(keyed_table).collect()}
-    assert ("3", "v3-new") not in out  # sanity: tuple types
-    assert (3, "v3-new") in out and (7, "v7-new") in out and (8, "v8") in out
-    assert len(out) == 100
-
-
-def test_indexed_upsert_matches_full_merge(spark, keyed_table):
-    batch = spark.createDataFrame(
-        [(10, "u10", 9), (55, "u55", 9), (200, "ins", 9), (20, "stale", 0)],
-        KSCHEMA,
-    )
-    full = spark.read.parquet(keyed_table)
-    expected = {
-        tuple(r) for r in merge_upsert(full, batch, ["k"], "prec").collect()
-    }
-    upsert_parquet_indexed(spark, batch, keyed_table, "k", "prec")
-    assert {tuple(r) for r in spark.read.parquet(keyed_table).collect()} == expected
-
-
-def test_indexed_upsert_pure_insert_beyond_ranges(spark, keyed_table):
-    before = all_files(keyed_table)
-    batch = spark.createDataFrame([(1000, "new", 1), (1001, "new", 1)], KSCHEMA)
-    upsert_parquet_indexed(spark, batch, keyed_table, "k", "prec")
-    after = all_files(keyed_table)
-    # Nothing rewritten — all old files intact, one-plus new files added.
-    assert all(after[f] == before[f] for f in before)
-    assert len(after) > len(before)
-    assert spark.read.parquet(keyed_table).count() == 102
-
-
-def test_indexed_upsert_delete_records(spark, keyed_table):
-    batch = spark.createDataFrame(
-        [(3, None, 9, True), (42, None, 9, True)],
-        "k long, v string, prec long, deleted boolean",
-    )
-    upsert_parquet_indexed(
-        spark, batch, keyed_table, "k", "prec", delete_col="deleted"
-    )
-    out = spark.read.parquet(keyed_table)
-    assert out.count() == 98
-    assert out.filter(F.col("k").isin([3, 42])).count() == 0
-
-
-# ---------------------------------------------------------------------------
-# Bloom-indexed upsert (upsert_parquet_bloom_indexed): per-file bloom
-# bitsets as the write index. Unlike the range index, pruning must
-# survive an UNCLUSTERED (hash-scattered) layout.
-# ---------------------------------------------------------------------------
-
-from spark_hudi_etl_pipeline_spark.operators.merge import (
-    upsert_parquet_bloom_indexed,
-)
-
-
 @pytest.fixture()
 def scattered_table(spark, tmp_path):
     """100 keys hash-scattered over 5 files — every file's key RANGE
@@ -255,10 +194,89 @@ def scattered_table(spark, tmp_path):
     return path
 
 
+def test_indexed_upsert_rewrites_only_intersecting_files(spark, keyed_table):
+    before = all_files(keyed_table)
+    batch = spark.createDataFrame([(3, "v3-new", 2), (7, "v7-new", 2)], KSCHEMA)
+    upsert_parquet(spark, batch, keyed_table, ["k"], "prec", index="range")
+    after = all_files(keyed_table)
+    survivors = set(before) & set(after)
+    # Exactly one file (the 0..19 range) replaced; the other four intact.
+    assert len(set(before) - survivors) == 1
+    assert all(after[f] == before[f] for f in survivors)
+    out = {(r["k"], r["v"]) for r in spark.read.parquet(keyed_table).collect()}
+    assert ("3", "v3-new") not in out  # sanity: tuple types
+    assert (3, "v3-new") in out and (7, "v7-new") in out and (8, "v8") in out
+    assert len(out) == 100
+
+
+@pytest.mark.parametrize(
+    "index, layout",
+    [
+        (None, "scattered"),
+        ("range", "keyed"),
+        ("bloom", "scattered"),
+        ("record", "scattered"),
+    ],
+)
+def test_upsert_matches_full_merge(spark, request, index, layout):
+    table = request.getfixturevalue(f"{layout}_table")
+    batch = spark.createDataFrame(
+        [(10, "u10", 9), (55, "u55", 9), (200, "ins", 9), (20, "stale", 0)],
+        KSCHEMA,
+    )
+    full = spark.read.parquet(table)
+    expected = {
+        tuple(r) for r in merge_upsert(full, batch, ["k"], "prec").collect()
+    }
+    upsert_parquet(spark, batch, table, ["k"], "prec", index=index)
+    assert {tuple(r) for r in spark.read.parquet(table).collect()} == expected
+
+
+@pytest.mark.parametrize("index", ["range", "bloom", "record"])
+def test_upsert_pure_insert_rewrites_nothing(spark, scattered_table, index):
+    before = all_files(scattered_table)
+    batch = spark.createDataFrame([(1000, "new", 1), (1001, "new", 1)], KSCHEMA)
+    upsert_parquet(spark, batch, scattered_table, ["k"], "prec", index=index)
+    after = all_files(scattered_table)
+    # Nothing rewritten — all old files intact, one-plus new files added.
+    assert all(after[f] == before[f] for f in before)
+    assert len(after) > len(before)
+    assert spark.read.parquet(scattered_table).count() == 102
+
+
+def test_indexed_upsert_delete_records(spark, keyed_table):
+    batch = spark.createDataFrame(
+        [(3, None, 9, True), (42, None, 9, True)],
+        "k long, v string, prec long, deleted boolean",
+    )
+    upsert_parquet(
+        spark, batch, keyed_table, ["k"], "prec", index="range", delete_col="deleted"
+    )
+    out = spark.read.parquet(keyed_table)
+    assert out.count() == 98
+    assert out.filter(F.col("k").isin([3, 42])).count() == 0
+
+
+def test_index_argument_guards(spark, tmp_path):
+    """Combinations no caller needs are refused, not half-supported."""
+    path = str(tmp_path / "g")
+    batch = spark.createDataFrame([(1, 1, "a", 1)], "k long, k2 long, v string, prec long")
+    refused = [
+        ("single-column key", ["k", "k2"], dict(index="range")),
+        ("sidecar", ["k"], dict(index="bloom", clean=False)),
+        ("sidecar", ["k"], dict(index="record", base_version=1)),
+        ("evolve_schema", ["k"], dict(index="range", evolve_schema=True)),
+    ]
+    for match, keys, kw in refused:
+        with pytest.raises(ValueError, match=match):
+            upsert_parquet(spark, batch, path, keys, "prec", **kw)
+    assert not os.path.exists(path)
+
+
 def test_bloom_upsert_prunes_on_scattered_layout(spark, scattered_table):
     before = all_files(scattered_table)
     batch = spark.createDataFrame([(3, "v3-new", 2)], KSCHEMA)
-    upsert_parquet_bloom_indexed(spark, batch, scattered_table, "k", "prec")
+    upsert_parquet(spark, batch, scattered_table, ["k"], "prec", index="bloom")
     after = all_files(scattered_table)
     survivors = set(before) & set(after)
     # Only the one file whose bloom contains key 3 is replaced; with
@@ -270,37 +288,14 @@ def test_bloom_upsert_prunes_on_scattered_layout(spark, scattered_table):
     assert len(out) == 100
 
 
-def test_bloom_upsert_matches_full_merge(spark, scattered_table):
-    batch = spark.createDataFrame(
-        [(10, "u10", 9), (55, "u55", 9), (200, "ins", 9), (20, "stale", 0)],
-        KSCHEMA,
-    )
-    full = spark.read.parquet(scattered_table)
-    expected = {
-        tuple(r) for r in merge_upsert(full, batch, ["k"], "prec").collect()
-    }
-    upsert_parquet_bloom_indexed(spark, batch, scattered_table, "k", "prec")
-    got = {tuple(r) for r in spark.read.parquet(scattered_table).collect()}
-    assert got == expected
-
-
-def test_bloom_upsert_pure_insert_no_rewrites(spark, scattered_table):
-    before = all_files(scattered_table)
-    batch = spark.createDataFrame([(1000, "new", 1), (1001, "new", 1)], KSCHEMA)
-    upsert_parquet_bloom_indexed(spark, batch, scattered_table, "k", "prec")
-    after = all_files(scattered_table)
-    assert all(after[f] == before[f] for f in before)
-    assert len(after) > len(before)
-    assert spark.read.parquet(scattered_table).count() == 102
-
-
 def test_bloom_upsert_delete_records_and_incremental_index(spark, scattered_table):
     batch = spark.createDataFrame(
         [(3, None, 9, True), (42, None, 9, True)],
         "k long, v string, prec long, deleted boolean",
     )
-    upsert_parquet_bloom_indexed(
-        spark, batch, scattered_table, "k", "prec", delete_col="deleted"
+    upsert_parquet(
+        spark, batch, scattered_table, ["k"], "prec", index="bloom",
+        delete_col="deleted",
     )
     out = spark.read.parquet(scattered_table)
     assert out.count() == 98
@@ -330,7 +325,7 @@ def test_bloom_upsert_stale_sidecar_falls_back_to_cold_rebuild(
     )
 
     batch = spark.createDataFrame([(7, "warm", 2)], KSCHEMA)
-    upsert_parquet_bloom_indexed(spark, batch, scattered_table, "k", "prec")
+    upsert_parquet(spark, batch, scattered_table, ["k"], "prec", index="bloom")
 
     # Simulate the torn commit: a new data file (key 500) is moved in
     # AND referenced by a published manifest — the crash happens just
@@ -353,7 +348,7 @@ def test_bloom_upsert_stale_sidecar_falls_back_to_cold_rebuild(
     assert "part-torn-00000.parquet" not in indexed  # sidecar IS stale
 
     batch2 = spark.createDataFrame([(500, "fixed", 9)], KSCHEMA)
-    upsert_parquet_bloom_indexed(spark, batch2, scattered_table, "k", "prec")
+    upsert_parquet(spark, batch2, scattered_table, ["k"], "prec", index="bloom")
     out = spark.read.parquet(scattered_table).filter(F.col("k") == 500)
     rows = [(r["k"], r["v"]) for r in out.collect()]
     assert rows == [(500, "fixed")]  # exactly one row — no duplicate key
@@ -368,17 +363,18 @@ def test_manifest_commit_crash_never_torn(spark, scattered_table):
     """Crash-between-stage-and-commit: data files that were moved in but
     never referenced by a published manifest are invisible to readers —
     a reader sees the complete old state or the complete new state,
-    never a mix. The next successful commit also cleans the orphans."""
+    never a mix. The orphan vacuum reclaims the orphans."""
     import os
     import shutil
 
     from spark_hudi_etl_pipeline_spark.operators.merge import (
         read_indexed_table,
         table_live_files,
+        vacuum_orphans,
     )
 
     batch = spark.createDataFrame([(3, "v3-new", 2)], KSCHEMA)
-    upsert_parquet_indexed(spark, batch, scattered_table, "k", "prec")
+    upsert_parquet(spark, batch, scattered_table, ["k"], "prec", index="range")
     before = {(r["k"], r["v"]) for r in read_indexed_table(spark, scattered_table).collect()}
     v_before, _ = table_live_files(scattered_table)
 
@@ -397,16 +393,104 @@ def test_manifest_commit_crash_never_torn(spark, scattered_table):
     assert after_crash == before
     assert table_live_files(scattered_table)[0] == v_before
 
-    # The next successful commit supersedes the orphan and cleans it.
+    # The next successful commit supersedes the orphan; the cleaner only
+    # deletes what that commit replaced, the orphan vacuum reclaims it.
     batch2 = spark.createDataFrame([(4, "v4-new", 3)], KSCHEMA)
-    upsert_parquet_indexed(spark, batch2, scattered_table, "k", "prec")
+    upsert_parquet(spark, batch2, scattered_table, ["k"], "prec", index="range")
     final = {(r["k"], r["v"]) for r in read_indexed_table(spark, scattered_table).collect()}
     assert (3, "v3-new") in final and (4, "v4-new") in final
     assert not any(v == "TORN" for _, v in final)
-    assert not os.path.exists(orphan)  # cleaner removed the orphan
-    # Directory read and manifest read agree after the clean commit.
+    assert vacuum_orphans(scattered_table, min_age_seconds=0) == [
+        os.path.basename(orphan)
+    ]
+    assert not os.path.exists(orphan)
+    # Directory read and manifest read agree after the vacuum.
     dir_read = {(r["k"], r["v"]) for r in spark.read.parquet(scattered_table).collect()}
     assert dir_read == final
+
+
+@pytest.mark.parametrize("index", [None, "record"])
+def test_cleaner_spares_unreferenced_files_it_did_not_replace(spark, tmp_path, index):
+    """A fresh unreferenced file may be a concurrent writer's moved-in,
+    not-yet-published commit: the post-commit cleaner deletes only the
+    files its own commit replaced; the age-floored orphan vacuum is what
+    reclaims a true orphan."""
+    import shutil
+
+    from spark_hudi_etl_pipeline_spark.operators.merge import (
+        read_indexed_table,
+        table_live_files,
+        vacuum_orphans,
+    )
+
+    path = str(tmp_path / "t")
+    rows = spark.createDataFrame([(k, f"v{k}", 1) for k in range(100)], KSCHEMA)
+    upsert_parquet(spark, rows.repartition(4, "k"), path, ["k"], "prec", index=index)
+    inflight = os.path.join(path, "part-upsert-inflight-00000.parquet")
+    shutil.copy(os.path.join(path, sorted(all_files(path))[0]), inflight)
+    batch = spark.createDataFrame([(k, "new", 2) for k in range(0, 100, 9)], KSCHEMA)
+    upsert_parquet(spark, batch, path, ["k"], "prec", index=index)
+    assert os.path.exists(inflight)
+    got = {r["k"]: r["v"] for r in read_indexed_table(spark, path).collect()}
+    assert got == {k: "new" if k % 9 == 0 else f"v{k}" for k in range(100)}
+    assert vacuum_orphans(path, min_age_seconds=0) == [os.path.basename(inflight)]
+    assert set(all_files(path)) == set(table_live_files(path)[1])
+
+
+def test_commit_loser_removes_the_files_it_moved_in(spark, tmp_path, monkeypatch):
+    """Losing the manifest compare-and-swap leaves no trace: the loser's
+    moved-in files are referenced by no manifest, so it deletes them."""
+    from spark_hudi_etl_pipeline_spark.operators import merge as merge_mod
+
+    path = str(tmp_path / "t")
+    rows = spark.createDataFrame([(k, f"v{k}", 1) for k in range(20)], KSCHEMA)
+    upsert_parquet(spark, rows, path, ["k"], "prec")
+    on_disk = set(all_files(path))
+    _, live = merge_mod.table_live_files(path)
+    real = merge_mod._manifest_publish
+
+    def raced(p, files, version):
+        real(p, live, version)  # a concurrent writer claims the version first
+        real(p, files, version)
+
+    monkeypatch.setattr(merge_mod, "_manifest_publish", raced)
+    batch = spark.createDataFrame([(3, "lost", 2)], KSCHEMA)
+    with pytest.raises(merge_mod.ConcurrentCommitError):
+        upsert_parquet(spark, batch, path, ["k"], "prec")
+    assert set(all_files(path)) == on_disk
+    assert not [d for d in os.listdir(path) if d.startswith(".staging")]
+
+
+def test_live_file_read_lists_once_past_discovery_threshold(spark, tmp_path):
+    """Live files are read through ONE listing of the table directory:
+    naming 40 files as 40 paths would add a parallel listing job (Spark
+    lists more than 32 paths with a job), the manifest read must cost
+    the same jobs as a plain directory read."""
+    import uuid
+
+    from spark_hudi_etl_pipeline_spark.operators.merge import (
+        read_indexed_table,
+        table_live_files,
+    )
+
+    path = str(tmp_path / "wide")
+    spark.range(400).repartition(40).write.parquet(path)
+    assert len(table_live_files(path)[1]) == 40
+    sc = spark.sparkContext
+
+    def jobs(build):
+        group = f"listing-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            build()
+        finally:
+            sc.setJobGroup(None, None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert jobs(lambda: read_indexed_table(spark, path)) == jobs(
+        lambda: spark.read.parquet(path)
+    )
+    assert read_indexed_table(spark, path).count() == 400
 
 
 def test_vacuum_orphans_rules(spark, tmp_path):
@@ -422,7 +506,7 @@ def test_vacuum_orphans_rules(spark, tmp_path):
     )
     from spark_hudi_etl_pipeline_spark.operators.merge import (
         read_indexed_table,
-        upsert_parquet_indexed,
+        upsert_parquet,
         vacuum_orphans,
     )
 
@@ -432,7 +516,7 @@ def test_vacuum_orphans_rules(spark, tmp_path):
     )
     write_clustered(cluster_linear(df, ["k"], 4), path)
     batch = df.filter(F.col("k") % 10 == 0).withColumn("v", F.col("v") + 1)
-    upsert_parquet_indexed(spark, batch, path, "k", "v")
+    upsert_parquet(spark, batch, path, ["k"], "v", index="range")
     before = {r["k"]: r["v"] for r in read_indexed_table(spark, path).collect()}
 
     live = sorted(glob.glob(os.path.join(path, "*.parquet")))
@@ -467,7 +551,7 @@ def test_vacuum_keeps_files_older_manifests_reference(spark, tmp_path):
         manifest_files_at,
         read_indexed_table,
         retire_manifests,
-        upsert_parquet_indexed,
+        upsert_parquet,
         vacuum_orphans,
     )
 
@@ -475,9 +559,9 @@ def test_vacuum_keeps_files_older_manifests_reference(spark, tmp_path):
     df = spark.createDataFrame(
         [(i, i * 2, 1) for i in range(50)], "k long, v long, prec long"
     )
-    r1 = upsert_parquet_indexed(spark, df, path, "k", "prec")
+    r1 = upsert_parquet(spark, df, path, ["k"], "prec", index="range")
     upd = df.filter("k < 10").withColumn("v", F.col("v") + 1)
-    r2 = upsert_parquet_indexed(spark, upd, path, "k", "prec", clean=False)
+    r2 = upsert_parquet(spark, upd, path, ["k"], "prec", index="range", clean=False)
     assert (r1.version, r2.version) == (1, 2)
     v1_only = set(manifest_files_at(path, 1)) - set(manifest_files_at(path, 2))
     assert v1_only  # the rewrite really replaced files
@@ -505,16 +589,14 @@ def test_retire_manifests_rules(spark, tmp_path):
     """The cleaner never touches the latest version or a pinned one."""
     import os
 
-    from spark_hudi_etl_pipeline_spark.operators.merge import (
-        retire_manifests,
-        upsert_parquet_indexed,
-    )
+    from spark_hudi_etl_pipeline_spark.operators.merge import retire_manifests
 
     path = os.path.join(str(tmp_path), "t")
     df = spark.createDataFrame([(1, 1, 1)], "k long, v long, prec long")
     for i in range(4):
-        upsert_parquet_indexed(
-            spark, df.withColumn("v", F.lit(i)), path, "k", "prec", clean=False
+        upsert_parquet(
+            spark, df.withColumn("v", F.lit(i)), path, ["k"], "prec",
+            index="range", clean=False,
         )
     import pytest as _pytest
 

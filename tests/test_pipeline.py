@@ -252,3 +252,77 @@ def test_run_with_retries_exhausts_and_raises(spark, tmp_path):
     assert log.filter(F.col("status") == "FAILED").count() == 2
     with pytest.raises(ValueError):
         run_with_retries(spark, cfg, max_attempts=0)
+
+
+def parquet_names(path):
+    import glob
+    import os
+
+    return sorted(os.path.basename(f) for f in glob.glob(os.path.join(path, "*.parquet")))
+
+
+def test_pipeline_tables_are_manifest_committed(spark, tmp_path):
+    """Every table a run writes — target and audit log — is committed
+    through the manifest, and its latest version lists exactly the data
+    files in the directory (no stale or unreferenced files left)."""
+    from spark_hudi_etl_pipeline_spark.operators.merge import _manifest_latest
+
+    t0 = now_ms()
+    rows = [(1, "u1", t0 - 1000, "a"), (2, "u2", t0 - 500, "b")]
+    run_pipeline(spark, make_config(spark, tmp_path, rows))
+    cfg = make_config(spark, tmp_path, rows + [(3, "u3", now_ms() + 60_000, "c")])
+    run_pipeline(spark, cfg)
+    for path in (cfg.target_path, cfg.log_path):
+        latest = _manifest_latest(path)
+        assert latest is not None and latest[0] == 2
+        assert sorted(latest[1]) == parquet_names(path)
+
+
+def test_failed_target_commit_keeps_state_and_watermark(spark, tmp_path, monkeypatch):
+    """A crash at the target's commit point: the run logs FAILED, readers
+    see the pre-run table, the watermark stays put — and the next run
+    re-extracts the same window and lands the batch exactly once."""
+    from spark_hudi_etl_pipeline_spark.operators import merge as merge_mod
+
+    t0 = now_ms()
+    rows = [(1, "u1", t0 - 1000, "a"), (2, "u2", t0 - 500, "b")]
+    cfg = make_config(spark, tmp_path, rows)
+    run_pipeline(spark, cfg)
+    watermark = get_last_run_timestamp(spark, cfg.log_path, cfg.name)
+    before = {tuple(r) for r in merge_mod.read_indexed_table(spark, cfg.target_path).collect()}
+
+    real = merge_mod._manifest_publish
+
+    def crash_on_target(path, files, version):
+        if path == cfg.target_path:
+            raise OSError("injected crash at the target commit point")
+        return real(path, files, version)
+
+    monkeypatch.setattr(merge_mod, "_manifest_publish", crash_on_target)
+    future = now_ms() + 60_000
+    cfg2 = make_config(
+        spark, tmp_path, rows + [(3, "u3", future, "c"), (1, "u1", future, "a2")]
+    )
+    with pytest.raises(OSError, match="injected"):
+        run_pipeline(spark, cfg2)
+    statuses = [
+        r["status"]
+        for r in merge_mod.read_indexed_table(spark, cfg.log_path)
+        .orderBy("created_at")
+        .collect()
+    ]
+    assert statuses == ["SUCCESS", "FAILED"]
+    after = {tuple(r) for r in merge_mod.read_indexed_table(spark, cfg.target_path).collect()}
+    assert after == before
+    assert get_last_run_timestamp(spark, cfg.log_path, cfg.name) == watermark
+
+    monkeypatch.undo()
+    r3 = run_pipeline(spark, cfg2)
+    assert r3.status == "SUCCESS" and r3.watermark_used == watermark
+    assert r3.records_processed == 2
+    got = {
+        r["record_id"]: r["payload"]
+        for r in merge_mod.read_indexed_table(spark, cfg.target_path).collect()
+    }
+    assert got == {1: "a2", 2: "b", 3: "c"}
+    assert merge_mod.read_indexed_table(spark, cfg.target_path).count() == 3

@@ -9,7 +9,7 @@ import pytest
 
 from spark_hudi_etl_pipeline_spark.operators.merge import (
     ConcurrentCommitError,
-    upsert_parquet_indexed,
+    upsert_parquet,
 )
 from spark_hudi_etl_pipeline_spark.operators.txn import (
     BranchMergeConflict,
@@ -69,7 +69,7 @@ def test_torn_publish_is_invisible_to_catalog_readers(spark, cat):
     # manifest publish but BEFORE the catalog CAS: the table's own
     # latest manifest advances, the catalog does not.
     torn = spark.createDataFrame([(1, "TORN", 99)], SCHEMA)
-    upsert_parquet_indexed(spark, torn, a, "k", "prec", clean=False)
+    upsert_parquet(spark, torn, a, ["k"], "prec", index="range", clean=False)
     cv, tables = catalog_latest(root)
     assert cv == 1
     assert rows_of(read_table_at_catalog(spark, root, "ta", a)) == before_a
@@ -220,10 +220,10 @@ def test_txn_pins_the_version_its_own_upsert_published(spark, cat, monkeypatch):
     )
 
     root, a, b = cat
-    real = upsert_parquet_indexed
+    real = upsert_parquet
 
-    def upsert_then_interloper(spark_, batch, path, key, precombine, **kw):
-        res = real(spark_, batch, path, key, precombine, **kw)
+    def upsert_then_interloper(spark_, batch, path, keys, precombine, **kw):
+        res = real(spark_, batch, path, keys, precombine, **kw)
         # Interloper: another writer publishes the NEXT version (same
         # files — content is irrelevant, the pin is what matters).
         _manifest_publish(
@@ -231,7 +231,7 @@ def test_txn_pins_the_version_its_own_upsert_published(spark, cat, monkeypatch):
         )
         return res
 
-    monkeypatch.setattr(txn_mod, "upsert_parquet_indexed", upsert_then_interloper)
+    monkeypatch.setattr(txn_mod, "upsert_parquet", upsert_then_interloper)
     u = spark.createDataFrame([(2, "mine", 20)], SCHEMA)
     txn_commit(spark, root, [("ta", a, u, "k", "prec")])
     _, tables = catalog_latest(root)

@@ -450,23 +450,21 @@ def probe_lifecycle(base: str) -> None:
         # the timed run includes the index probe (O(index scan), two thin
         # columns), the affected-file merge, and the incremental index
         # maintenance; first write (table + index build) is untimed.
-        from spark_hudi_etl_pipeline_spark.operators.merge import (
-            upsert_parquet_record_indexed,
-        )
+        from spark_hudi_etl_pipeline_spark.operators.merge import upsert_parquet
 
         rt = f"{SCRATCH}/rli_{factor}x"
         shutil.rmtree(rt, ignore_errors=True)
-        upsert_parquet_record_indexed(
+        upsert_parquet(
             spark, o.repartition(8 * factor, "o_orderkey"), rt,
-            "o_orderkey", "o_orderdate",
+            ["o_orderkey"], "o_orderdate", index="record",
         )
         rbatch = o.filter(F.col("o_orderkey") % 50 == 0).withColumn(
             "o_orderdate", F.col("o_orderdate") + F.expr("INTERVAL 30 DAYS")
         )
         t0 = _time.perf_counter()
-        n = upsert_parquet_record_indexed(
-            spark, rbatch, rt, "o_orderkey", "o_orderdate"
-        )
+        n = upsert_parquet(
+            spark, rbatch, rt, ["o_orderkey"], "o_orderdate", index="record"
+        ).rows_written
         results["rli_upsert"][factor] = _time.perf_counter() - t0
         nrows["rli_upsert"][factor] = n
 
@@ -740,119 +738,6 @@ def probe_skew(base: str) -> None:
     with open("/root/repo/SCALE.md", "w") as f:
         f.write(content)
     print("appended skew section to /root/repo/SCALE.md")
-    shutil.rmtree(SCRATCH, ignore_errors=True)
-
-
-def probe_upsert_skew(base: str) -> None:
-    """Measured hot-key UPSERT skew (r5 verdict ask #5): a batch whose
-    updates concentrate on one record key — 40% of batch rows on a
-    single o_orderkey — merged into orders, flat vs salt_buckets=16.
-    The precombine window is the merge's only skew surface (both merge
-    joins are key-unique); salting two-phases it. Results are asserted
-    identical before timing. Appends/replaces a SCALE.md section.
-    Usage: python tools/scale_probe.py --upsert-skew
-    """
-    import re
-    import time as _time
-
-    from pyspark.sql import functions as F
-
-    from spark_hudi_etl_pipeline_spark.operators.merge import merge_upsert
-    from spark_hudi_etl_pipeline_spark.session import get_spark_session
-
-    spark = get_spark_session("scale-probe-upsert-skew")
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1 << 20).select(F.sum("id")).collect()
-
-    cols = ["o_orderkey", "o_custkey", "o_totalprice", "o_orderdate"]
-    orders = spark.read.parquet(f"{base}/orders.parquet").select(*cols)
-    # Tie-free precombine: existing rows at version 0; each batch row's
-    # version derives from its ORIGINAL key and copy index (unique per
-    # row even after 40% of rows are re-keyed onto the hot key — ties
-    # would legitimately resolve differently under salting, which is
-    # not what this probe measures).
-    existing = orders.withColumn("prec", F.lit(0).cast("long"))
-
-    def build_batch(factor: int):
-        parts = []
-        for r in range(factor):
-            parts.append(
-                orders.withColumn(
-                    "prec",
-                    (F.col("o_orderkey") * 100 + F.lit(r + 1)).cast("long"),
-                ).withColumn(
-                    "o_totalprice", F.col("o_totalprice") * (1.0 + r)
-                )
-            )
-        b = parts[0]
-        for p in parts[1:]:
-            b = b.unionByName(p)
-        b = b.withColumn(
-            "o_orderkey",
-            F.when(F.col("o_custkey") % 5 < 2, F.lit(1)).otherwise(
-                F.col("o_orderkey")
-            ),
-        )
-        path = f"{SCRATCH}/upsert_skew_batch_{factor}x"
-        b.write.mode("overwrite").parquet(path)
-        return spark.read.parquet(path)
-
-    def run(batch, salt: int | None) -> float:
-        t0 = _time.perf_counter()
-        merge_upsert(
-            existing, batch, ["o_orderkey"], "prec", salt_buckets=salt
-        ).write.mode("overwrite").format("noop").save()
-        return _time.perf_counter() - t0
-
-    # Correctness first: identical results on the 4x batch.
-    b4 = build_batch(4)
-    flat_rows = merge_upsert(existing, b4, ["o_orderkey"], "prec")
-    salt_rows = merge_upsert(
-        existing, b4, ["o_orderkey"], "prec", salt_buckets=16
-    )
-    diff = flat_rows.exceptAll(salt_rows).limit(1).count()
-    assert diff == 0, "salted merge diverged from flat"
-
-    results: dict[str, dict[int, float]] = {"flat": {}, "salt16": {}}
-    for factor in (4, 16):
-        batch = build_batch(factor)
-        for mode, salt in (("flat", None), ("salt16", 16)):
-            for _ in range(2):  # warm second run recorded
-                results[mode][factor] = run(batch, salt)
-        print(f"factor {factor}x done", flush=True)
-
-    lines = [
-        "",
-        "## hot-key upsert probe (40% of batch updates on ONE record key)",
-        "",
-        "merge_upsert's precombine window is its only skew surface (both",
-        "merge joins are key-unique on both sides). MEASURED RESULT: the",
-        "flat path WINS — Spark 4 plans the rank<=1 filter as",
-        "WindowGroupLimit Partial/Final (verified in the executed plan),",
-        "a map-side top-1-per-key reduction BEFORE the shuffle, so the",
-        "hot key arrives at its reducer already collapsed to ~one row",
-        "per upstream task and never funnels. salt_buckets=16 pays a",
-        "second shuffle for protection the engine already provides;",
-        "keep it OFF on any engine that plans WindowGroupLimit (it",
-        "remains correct, outputs asserted identical by exceptAll before",
-        "timing — the batch's precombine version is unique per row by",
-        "construction).",
-        "",
-        "| strategy | t(4×) s | t(16×) s |",
-        "|---|---|---|",
-    ]
-    for key, r in results.items():
-        lines.append(f"| {key} | {r[4]:.2f} | {r[16]:.2f} |")
-    lines.append("")
-    with open("/root/repo/SCALE.md") as f:
-        content = f.read()
-    content = re.sub(
-        r"\n## hot-key upsert probe.*?(?=\n## |\Z)", "", content, flags=re.S
-    )
-    content += "\n".join(lines)
-    with open("/root/repo/SCALE.md", "w") as f:
-        f.write(content)
-    print("appended hot-key upsert section to /root/repo/SCALE.md")
     shutil.rmtree(SCRATCH, ignore_errors=True)
 
 
@@ -2652,12 +2537,6 @@ if __name__ == "__main__":
             "/root/testdata/sf0.1",
         )
         probe_curation(base_dir)
-    elif "--upsert-skew" in sys.argv:
-        base_dir = next(
-            (a for a in sys.argv[1:] if not a.startswith("--")),
-            "/root/testdata/sf0.1",
-        )
-        probe_upsert_skew(base_dir)
     elif "--skew" in sys.argv:
         base_dir = next(
             (a for a in sys.argv[1:] if not a.startswith("--")),
