@@ -435,6 +435,8 @@ def upsert_parquet(
     import os
 
     if index is not None:
+        if index not in ("range", *_SIDECARS):
+            raise ValueError(f"unknown index {index!r}")
         if len(keys) != 1:
             raise ValueError(f"index={index!r} needs a single-column key, got {keys}")
         if evolve_schema:
@@ -957,8 +959,6 @@ def _touched_files(
     if index == "record":
         rows = sidecar.join(F.broadcast(probe.select(key)), on=key, how="left_semi")
         return [r["file"] for r in rows.select("file").distinct().collect()]
-    if index != "range":
-        raise ValueError(f"unknown index {index!r}")
     keys = sorted({r[0] for r in probe.select(key).collect() if r[0] is not None})
 
     def meets(lo, hi) -> bool:

@@ -5,7 +5,6 @@ larger-precombine-wins, convergence on rerun."""
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from spark_hudi_etl_pipeline_spark.operators.merge import (
     merge_upsert,
@@ -317,7 +316,7 @@ def test_precombine_hot_key_flat(spark):
 
 
 def test_flat_precombine_plans_window_group_limit(spark):
-    """The measured reason salting stays off by default (SCALE.md
+    """The measured reason the precombine needs no salting (SCALE.md
     §hot-key upsert probe): Spark plans the rank<=1 filter as a
     Partial+Final WindowGroupLimit — map-side top-1-per-key before the
     shuffle. Pin it so an engine upgrade that drops the rewrite is a

@@ -262,6 +262,7 @@ def test_index_argument_guards(spark, tmp_path):
     path = str(tmp_path / "g")
     batch = spark.createDataFrame([(1, 1, "a", 1)], "k long, k2 long, v string, prec long")
     refused = [
+        ("unknown index", ["k"], dict(index="btree")),
         ("single-column key", ["k", "k2"], dict(index="range")),
         ("sidecar", ["k"], dict(index="bloom", clean=False)),
         ("sidecar", ["k"], dict(index="record", base_version=1)),
