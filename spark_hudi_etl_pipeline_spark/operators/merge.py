@@ -939,10 +939,10 @@ def _touched_files(
     ``index`` — the one file-selection step shared by the writer (probe =
     the batch) and :func:`read_point_lookup` (probe = the looked-up
     values). ``sidecar`` is the loaded bloom/record relation for those
-    indexes; their probes are broadcast joins, so only file NAMES reach
-    the driver (Hudi's index-lookup contract).
+    indexes; their probes are broadcast joins, so only file NAMES are
+    collected (Hudi's index-lookup contract).
 
-    ``"range"`` compares on the driver: the probe's keys are collected
+    ``"range"`` compares in this process: the probe's keys are collected
     (the batch is the small side by contract — :func:`merge_upsert`
     broadcasts its keys anyway), sorted once, and each file's footer
     [min, max] is one binary search — O((keys + files) · log keys), no
